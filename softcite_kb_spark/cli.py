@@ -118,7 +118,7 @@ def _get_session(conf: dict | None = None):
     except Exception as e:  # pragma: no cover - message-matched fallback
         if "master" not in str(e).lower():
             raise
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
         spark = build({"spark.master": f"local[{cpus}]",
                        "spark.sql.shuffle.partitions": cpus})
     spark.sparkContext.setLogLevel("WARN")

@@ -8,9 +8,12 @@ idempotent re-runs guarded by ``collection.has(key)``,
 software_mention_import.py:126, Readme.md:261-265 — but transactional:
 a stage either commits a snapshot or leaves the previous one current).
 
-Per north_rule, every stage also writes per-partition lineage + metrics
-rows (``spark_partition_id()`` rollups) into ``_metrics``; the reference
-has no analog (it logs progress counts to stdout, Readme.md:196-245).
+Per north_rule, every stage record also carries metrics for each output
+table — rows, files, bytes, the largest file's rows (partition skew) and
+the commit mode — read from the committed snapshot's metadata (no Spark
+job) and saved by the same atomic manifest write as the snapshot ids;
+the reference has no analog (it logs progress counts to stdout,
+Readme.md:196-245).
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ from pyspark.sql import functions as F
 from softcite_kb_spark.operators import canonicalize as cz
 from softcite_kb_spark.operators import extraction as ex
 from softcite_kb_spark.operators import linking as lk
-from softcite_kb_spark.storage import TableStore
+from softcite_kb_spark.storage import Snapshot, TableStore
 
 
 @dataclass
@@ -84,8 +87,10 @@ class KGPipeline:
       stage 1: ``triples``, ``mentions``, ``folded_mentions``
       stage 2: ``linked_mentions``
       stage 3: ``canonical_map``, ``statements``, ``nodes``, ``edges``
-    plus ``_metrics`` (per-stage, per-partition row counts + timings) and
-    the manifest file ``_manifest.json`` in the store root.
+    plus the manifest file ``_manifest.json`` in the store root: one
+    record per stage with its input/output snapshot ids, seconds, and a
+    ``tables`` entry per output table (``rows``, ``files``, ``bytes``,
+    ``max_file_rows``, ``commit_mode``).
     """
 
     STAGES = ("extract", "link", "canonicalize")
@@ -109,12 +114,6 @@ class KGPipeline:
         # until a consumer joins them (see _prewarm_broadcast_decision)
         self._bc_probe_cache: dict[tuple, bool] = {}
         self._bc_probe_futures: dict = {}
-        # deferred metrics appends: a SINGLE-worker executor (appends to
-        # the one _metrics table must never run concurrently with each
-        # other) whose jobs fill the next stage's first wave; run()
-        # joins every pending append before returning (_join_metrics)
-        self._metrics_exec = None
-        self._metrics_futs: list = []
 
     # -- manifest ---------------------------------------------------------
     def _load_manifest(self) -> dict:
@@ -150,114 +149,45 @@ class KGPipeline:
                 return False
         return True
 
+    @staticmethod
+    def _table_record(snap: Snapshot) -> dict:
+        """A stage record's entry for one committed output snapshot:
+        rows, file count, byte total and the largest file's rows (the
+        partition-skew signal) from the snapshot's own metadata, plus
+        how it was committed — "pruned" vs "full-rewrite" merges matter
+        operationally at scale (a silent full-rewrite merge is the
+        100 TB failure mode to monitor for). -1 = not recorded."""
+        sp = snap.properties or {}
+        return {
+            "rows": snap.row_count,
+            "files": int(sp.get("total-data-files", -1)),
+            "bytes": int(sp.get("total-files-size", -1)),
+            "max_file_rows": int(sp.get("max-file-records", -1)),
+            "commit_mode": (sp.get("merge_mode") or sp.get("operation")
+                            or "write"),
+        }
+
     def _record_stage(self, stage: str, inputs: dict[str, int],
-                      outputs: dict[str, int], seconds: float,
-                      rows: dict[str, int]) -> None:
+                      seconds: float) -> None:
+        """Commit the stage's record: output snapshot ids and their
+        ``tables`` entries come from ONE read of each current snapshot
+        and land in one atomic manifest write."""
+        outputs, tables = {}, {}
+        for t in self._STAGE_IO[stage][1]:
+            snap = self.store.current_snapshot(t)
+            outputs[t] = snap.snapshot_id if snap else -1
+            if snap is not None:
+                tables[t] = self._table_record(snap)
         m = self._load_manifest()
         m[stage] = {
             "inputs": inputs,
             "outputs": outputs,
             "config": self.config.fingerprint(),
             "seconds": round(seconds, 3),
-            "rows": rows,
+            "tables": tables,
             "finished_at": time.time(),
         }
         self._save_manifest(m)
-
-    # -- metrics / lineage ------------------------------------------------
-    def _write_metrics(self, stage: str, df: DataFrame, table: str) -> None:
-        """Per-partition lineage/metrics rows (north_rule requirement).
-
-        Append-only (store.append hardlinks prior files — O(new rows), not
-        the O(stages^2) read-and-rewrite a filtered overwrite would cost);
-        ``run_ts`` stamps each commit so readers take the latest rows per
-        (stage, table) — see :func:`read_metrics`.
-        """
-        snap = self.store.current_snapshot(table)
-        sp = (snap.properties or {}) if snap else {}
-        # how the table's current snapshot was committed — "pruned" vs
-        # "full-rewrite" merges matter operationally at scale (a silent
-        # full-rewrite merge is the 100 TB failure mode to monitor for)
-        commit_mode = sp.get("merge_mode") or sp.get("operation") or "write"
-        part = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").cast("long").alias("n_rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("table", F.lit(table))
-            .withColumn("config", F.lit(self.config.fingerprint()))
-            .withColumn("commit_mode", F.lit(commit_mode))
-            .withColumn("run_ts", F.lit(time.time()))
-        )
-        self._append_metrics(part)
-
-    def _append_metrics(self, part: DataFrame) -> None:
-        """Append metrics rows, migrating a pre-existing _metrics table
-        whose schema differs (e.g. a store written by an older or NEWER
-        library version): the rewritten table keeps the UNION of both
-        column sets — a column only the pre-existing table has is
-        backfilled with NULL on the new rows, never silently dropped.
-        Only the dedicated SchemaDriftError triggers the migration; any
-        other failure surfaces instead of causing a destructive
-        rewrite-then-retry."""
-        from softcite_kb_spark.storage import SchemaDriftError
-
-        try:
-            self.store.append(part, "_metrics")
-        except SchemaDriftError:
-            old = self.store.read(self.spark, "_metrics")
-            for f in part.schema.fields:
-                if f.name not in old.columns:
-                    old = old.withColumn(
-                        f.name, F.lit(None).cast(f.dataType))
-                else:
-                    # align drifted types too, or the rewritten table
-                    # would pin the old type and re-fail the append
-                    old = old.withColumn(
-                        f.name, F.col(f.name).cast(f.dataType))
-            old_only = [f for f in old.schema.fields
-                        if f.name not in part.columns]
-            for f in old_only:
-                part = part.withColumn(f.name, F.lit(None).cast(f.dataType))
-            cols = list(part.columns)  # new-schema order, old-only last
-            self.store.write(old.select(*cols), "_metrics")
-            self.store.append(part.select(*cols), "_metrics")
-
-    def _defer_metrics(self, fn) -> None:
-        """Run a metrics-writing thunk on the serialized background
-        worker. The thunk reads only COMMITTED snapshots (stages call
-        this after their output commit), so running it during the next
-        stage's compute cannot change its rows — it only moves the job
-        off the critical path."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        if self._metrics_exec is None:
-            self._metrics_exec = ThreadPoolExecutor(max_workers=1)
-        self._metrics_futs.append((self._metrics_exec.submit(fn), fn))
-
-    def _join_metrics(self) -> None:
-        """Join EVERY pending metrics append (never abandon one mid-
-        flight — an orphaned append could run concurrently with a later
-        call's metrics write, breaking the one-writer-at-a-time rule).
-        A failed append is retried once synchronously — the append reads
-        only committed snapshots and commits via staging-dir rename, so
-        a transient failure left nothing behind and the retry restores
-        the row; a persistent failure raises after all futures are
-        joined (the KB tables themselves are unaffected — _metrics is a
-        diagnostics append-log; re-run with resume=False to regenerate
-        the stage's row)."""
-        futs, self._metrics_futs = self._metrics_futs, []
-        first_err = None
-        for f, fn in futs:
-            try:
-                f.result()
-            except Exception:
-                try:
-                    fn()
-                except Exception as e2:
-                    if first_err is None:
-                        first_err = e2
-        if first_err is not None:
-            raise first_err
 
     def _stage_barrier(self, df: DataFrame) -> DataFrame:
         """Materialization barrier for an intra-stage frame shared by
@@ -268,17 +198,6 @@ class KGPipeline:
         if self.materializer is not None:
             return self.materializer(df)
         return df.localCheckpoint(eager=False)
-
-    def read_metrics(self, current_only: bool = True) -> DataFrame:
-        """The metrics/lineage table; with ``current_only`` keep only each
-        (stage, table)'s latest run (the append log is the full history)."""
-        m = self.store.read(self.spark, "_metrics")
-        if not current_only:
-            return m
-        from pyspark.sql import Window
-        w = Window.partitionBy("stage", "table")
-        return (m.withColumn("__mx", F.max("run_ts").over(w))
-                .filter(F.col("run_ts") == F.col("__mx")).drop("__mx"))
 
     # -- stages -----------------------------------------------------------
     def _blacklist_df(self) -> DataFrame | None:
@@ -331,27 +250,14 @@ class KGPipeline:
         # the checkpointed frame (instead of reading the just-written
         # mentions table back) yields identical rows and lets the two
         # independent table commits overlap (fixed commit cost dominates
-        # at this stage's row counts). A "lazy" localCheckpoint still
-        # runs the plan's shuffle stages at call time (AQE), so the
-        # mentions chain runs on a pool thread where its prefetch
-        # overlaps the metrics rollup — which reads the triples SNAPSHOT
-        # committed above (the re-read frame IS that snapshot) and is
-        # independent of the mentions/folded commits.
-        with ThreadPoolExecutor(max_workers=3) as pool:
-
-            def _mentions_then_folded() -> None:
-                mentions = self._stage_barrier(
-                    ex.mentions_from_triples(triples.drop("bucket")))
-                folded = ex.fold_mentions(mentions)
-                fm = pool.submit(self._write_stage1, mentions, "mentions")
-                self._write_stage1(folded, "folded_mentions")
-                fm.result()
-
-            fmf = pool.submit(_mentions_then_folded)
-            fx = pool.submit(self._write_metrics, "extract", triples,
-                             "triples")
-            fmf.result()
-            fx.result()
+        # at this stage's row counts).
+        mentions = self._stage_barrier(
+            ex.mentions_from_triples(triples.drop("bucket")))
+        folded = ex.fold_mentions(mentions)
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            fm = pool.submit(self._write_stage1, mentions, "mentions")
+            self._write_stage1(folded, "folded_mentions")
+            fm.result()
 
     def ingest_increment(self, new_transcripts: DataFrame) -> dict:
         """Incremental re-import (the reference's idempotent
@@ -512,7 +418,6 @@ class KGPipeline:
         new_batch = (new_transcripts if replaced_keys is None
                      else new_transcripts.join(replaced_keys, "conv_id",
                                                "left_anti"))
-        new_triples = None
         if replaced_keys is None or not new_batch.isEmpty():
             from concurrent.futures import ThreadPoolExecutor
 
@@ -538,7 +443,6 @@ class KGPipeline:
                 for f in futs:
                     f.result()
 
-        repl_triples = None
         if replaced_keys is not None:
             repl_batch = new_transcripts.join(replaced_keys, "conv_id",
                                               "left_semi")
@@ -603,26 +507,16 @@ class KGPipeline:
         # the committed outputs ARE the extract stage's outputs for the
         # new input state — record the manifest so run() skips
         # re-extraction
-        in_tables, out_tables = self._STAGE_IO["extract"]
-        inputs = self._input_snapshot_ids(in_tables)
-        outputs = self._input_snapshot_ids(out_tables)
-        rows = {t: self.store.current_snapshot(t).row_count
-                for t in out_tables}
-        self._record_stage("extract", inputs, outputs,
-                           time.time() - t0, rows)
-        # metrics roll up the BATCH's rows (this commit's lineage) — a
-        # full-table re-scan here would put an O(corpus) cost inside
-        # every O(batch) increment
-        metric_df = (new_triples if repl_triples is None else
-                     repl_triples if new_triples is None else
-                     new_triples.unionByName(repl_triples))
-        self._write_metrics("extract", metric_df, "triples")
+        inputs = self._input_snapshot_ids(self._STAGE_IO["extract"][0])
+        self._record_stage("extract", inputs, time.time() - t0)
 
     def compact_table(self, table: str):
         """Maintenance: compact a store table AND refresh every manifest
         entry that pins its snapshot id — without this, the next
         ``run(resume=True)`` would treat the layout-only rewrite as new
-        data and recompute the stage plus everything downstream."""
+        data and recompute the stage plus everything downstream. The
+        producing stage's ``tables`` entry is refreshed with the ids, so
+        it keeps describing the committed snapshot."""
         snap = self.store.compact(self.spark, table)
         m = self._load_manifest()
         changed = False
@@ -634,6 +528,8 @@ class KGPipeline:
                 if isinstance(ids, dict) and table in ids:
                     ids[table] = snap.snapshot_id
                     changed = True
+            if table in (rec.get("tables") or {}):
+                rec["tables"][table] = self._table_record(snap)
         if changed:
             self._save_manifest(m)
         return snap
@@ -732,9 +628,6 @@ class KGPipeline:
                 broadcast=bc,
                 hot_surface_threshold=self.config.hot_surface_threshold)
         self.store.write(linked, "linked_mentions")
-        self._defer_metrics(lambda: self._write_metrics(
-            "link", self.store.read(self.spark, "linked_mentions"),
-            "linked_mentions"))
 
     def stage_canonicalize(self) -> None:
         linked = self.store.read(self.spark, "linked_mentions")
@@ -786,8 +679,6 @@ class KGPipeline:
                     pool.submit(_edges_then_nodes)]
             for f in futs:
                 f.result()
-        self._defer_metrics(lambda: self._write_metrics(
-            "canonicalize", self.store.read(self.spark, "nodes"), "nodes"))
 
     # -- driver -----------------------------------------------------------
     _STAGE_IO: dict[str, tuple[list[str], list[str]]] = {
@@ -809,41 +700,21 @@ class KGPipeline:
             "canonicalize": self.stage_canonicalize,
         }
         report = {}
-        try:
-            for stage in self.STAGES:
-                in_tables, out_tables = self._STAGE_IO[stage]
-                inputs = self._input_snapshot_ids(in_tables)
-                if resume and self._stage_fresh(stage, inputs):
-                    report[stage] = "skipped"
-                else:
-                    if stage == "extract":
-                        # stage 1 never touches the authority tables —
-                        # float the stage-2/3 broadcast probe over it
-                        # (one fewer sequential count-job wave;
-                        # stage_link joins it)
-                        self._prewarm_broadcast_decision()
-                    t0 = time.time()
-                    fns[stage]()
-                    outputs = self._input_snapshot_ids(out_tables)
-                    rows = {
-                        t: (self.store.current_snapshot(t).row_count
-                            if self.store.exists(t) else 0)
-                        for t in out_tables
-                    }
-                    self._record_stage(stage, inputs, outputs,
-                                       time.time() - t0, rows)
-                    report[stage] = "ran"
-                if stop_after == stage:
-                    break
-        except BaseException:
-            # join (never abandon) pending appends, but don't let a
-            # metrics failure mask the stage failure being raised
-            try:
-                self._join_metrics()
-            except Exception:
-                pass
-            raise
-        # every deferred metrics append lands before run() returns, so
-        # callers observe the same committed state as before
-        self._join_metrics()
+        for stage in self.STAGES:
+            inputs = self._input_snapshot_ids(self._STAGE_IO[stage][0])
+            if resume and self._stage_fresh(stage, inputs):
+                report[stage] = "skipped"
+            else:
+                if stage == "extract":
+                    # stage 1 never touches the authority tables —
+                    # float the stage-2/3 broadcast probe over it
+                    # (one fewer sequential count-job wave;
+                    # stage_link joins it)
+                    self._prewarm_broadcast_decision()
+                t0 = time.time()
+                fns[stage]()
+                self._record_stage(stage, inputs, time.time() - t0)
+                report[stage] = "ran"
+            if stop_after == stage:
+                break
         return report

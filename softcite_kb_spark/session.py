@@ -22,16 +22,20 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to the local core count — at cluster
-    scale you would size this to ~2-3x total executor cores instead.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default the
+    host's core count). ``shuffle_partitions`` defaults to the local core
+    count — at cluster scale you would size this to ~2-3x total executor
+    cores instead. Driver memory defaults to a quarter of physical memory
+    (``SPARK_DRIVER_MEM`` overrides it).
     """
+    cores = str(os.cpu_count() or 1)
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', cores)}]"
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = os.cpu_count() or 32 if n == "*" else int(n)
+        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cores
+        shuffle_partitions = int(cores if n == "*" else n)
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or (
+        f"{os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') // 4 // 2**20}m")
 
     builder = (
         SparkSession.builder.master(master)
@@ -42,7 +46,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local-scale fidelity: the test/bench parquet files are a few MB;

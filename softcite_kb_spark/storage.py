@@ -8,7 +8,7 @@ and per-snapshot manifests (row counts, schema, inputs) — over plain
 parquet. On a cluster the operator-level verbs (write/merge/append/read)
 cut over to :class:`softcite_kb_spark.storage_iceberg.IcebergTableStore`
 (real catalog, merge as a real ``MERGE INTO``); the pipeline's
-manifest/metrics layer additionally uses ``root``/``current_snapshot``
+stage manifest additionally uses ``root``/``current_snapshot``
 — see that module's docstring for the remaining wiring.
 
 Reference analog: each softcite_kb stage materializes an ArangoDB database
@@ -29,13 +29,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-class SchemaDriftError(ValueError):
-    """An append whose batch schema diverges from the table schema —
-    raised as its own type so callers migrating a table on drift never
-    mistake an unrelated ValueError for drift (and destructively
-    rewrite a healthy table)."""
 
 
 @dataclass
@@ -284,9 +277,9 @@ class TableStore:
         # exact reader schema: partition-directory values otherwise go
         # through type INFERENCE on read (string '01' -> bigint 1)
         properties["schema_json"] = df.schema.json()
-        # row count from parquet footers (metadata-only; a spark re-scan
-        # per commit would double every stage's write cost)
-        n = self._parquet_row_count(data_dir)
+        # row count and file stats from parquet footers (metadata-only; a
+        # spark re-scan per commit would double every stage's write cost)
+        n = self._parquet_stats(data_dir, properties)
         snap = Snapshot(
             snapshot_id=sid,
             table=table,
@@ -460,7 +453,7 @@ class TableStore:
             snapshot_id=sid,
             table=table,
             path=data_dir,
-            row_count=self._parquet_row_count(data_dir),
+            row_count=self._parquet_stats(data_dir, props),
             schema_ddl=merged_affected.schema.simpleString(),
             committed_at=time.time(),
             properties=props,
@@ -490,7 +483,7 @@ class TableStore:
         if not self._types_match(snap, df, require_same_columns=True):
             # appended files cannot be rewritten later: a drifting batch
             # schema would re-pin how every EXISTING file is read
-            raise SchemaDriftError(
+            raise ValueError(
                 f"append schema drift on table {table!r}: batch schema "
                 f"{df.schema.simpleString()} != table schema "
                 f"{snap.schema_ddl}")
@@ -535,7 +528,7 @@ class TableStore:
             snapshot_id=sid,
             table=table,
             path=data_dir,
-            row_count=self._parquet_row_count(data_dir),
+            row_count=self._parquet_stats(data_dir, props),
             schema_ddl=df.schema.simpleString(),
             committed_at=time.time(),
             properties=props,
@@ -644,14 +637,26 @@ class TableStore:
                     shutil.copy2(s, d)
 
     @staticmethod
-    def _parquet_row_count(data_dir: str) -> int:
+    def _parquet_stats(data_dir: str, properties: dict[str, Any]) -> int:
+        """Row count of a snapshot's data files from their parquet
+        footers; the file count, byte total and largest per-file row
+        count go into ``properties`` under the Iceberg snapshot-summary
+        names (``max-file-records`` has no Iceberg counterpart)."""
         import pyarrow.parquet as pq
 
-        total = 0
-        for root, _dirs, files in os.walk(data_dir):
-            for f in files:
+        total = files = size = max_rows = 0
+        for root, _dirs, names in os.walk(data_dir):
+            for f in names:
                 if f.endswith(".parquet"):
-                    total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+                    p = os.path.join(root, f)
+                    n = pq.ParquetFile(p).metadata.num_rows
+                    total += n
+                    files += 1
+                    size += os.path.getsize(p)
+                    max_rows = max(max_rows, n)
+        properties.update({"total-data-files": files,
+                           "total-files-size": size,
+                           "max-file-records": max_rows})
         return total
 
     def compact(self, spark: SparkSession, table: str) -> Snapshot:
@@ -679,8 +684,9 @@ class TableStore:
         else:
             df = df.coalesce(max(1, spark.sparkContext.defaultParallelism))
         # FRESH properties: carrying the prior commit's merge_* metadata
-        # forward would make metrics record this maintenance commit as a
-        # merge (commit_mode prefers merge_mode over operation)
+        # forward would make the pipeline's stage record report this
+        # maintenance commit as a merge (its commit_mode prefers
+        # merge_mode over operation)
         props: dict[str, Any] = {
             "operation": "compact",
             "compacted_from": snap.snapshot_id,

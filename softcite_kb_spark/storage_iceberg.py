@@ -168,10 +168,13 @@ class IcebergTableStore:
     mount) for the pipeline's resume manifest ``_manifest.json`` — the
     stage MANIFEST is pipeline state, not table data, so it stays a
     file next to the job exactly as with ``TableStore``; everything
-    row-shaped (including ``_metrics``) lives in catalog tables.
-    ``current_snapshot`` reads the catalog's own snapshot metadata
-    (``<table>.history`` / ``<table>.snapshots``), so the pipeline's
-    input-snapshot fingerprinting works unchanged.
+    row-shaped lives in catalog tables. ``current_snapshot`` reads the
+    catalog's own snapshot metadata (``<table>.history`` /
+    ``<table>.snapshots``), so the pipeline's input-snapshot
+    fingerprinting works unchanged, and each stage record's per-table
+    rows/files/bytes come from the snapshot summary (``total-records``,
+    ``total-data-files``, ``total-files-size``); the summary has no
+    largest-file row count, so ``max_file_rows`` is -1 there.
 
     Session config the cluster needs (spark-submit)::
 

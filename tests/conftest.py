@@ -11,8 +11,9 @@ from softcite_kb_spark import datagen  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[8]", app_name="softcite-kb-tests",
-                  shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    s = get_spark(master=f"local[{cpus}]", app_name="softcite-kb-tests",
+                  shuffle_partitions=cpus)
     yield s
 
 

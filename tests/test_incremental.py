@@ -78,6 +78,16 @@ def test_incremental_equals_batch(spark, corpus_tables, tmp_path):
     for t in ("transcripts", "triples", "mentions", "folded_mentions"):
         props = st_inc.current_snapshot(t).properties
         assert props["operation"] == "append", (t, props)
+    # every stage record describes the committed snapshots; the extract
+    # record shows the increment's append commits
+    man = pipe_inc._load_manifest()
+    for stage in KGPipeline.STAGES:
+        for t, entry in man[stage]["tables"].items():
+            snap = st_inc.current_snapshot(t)
+            assert man[stage]["outputs"][t] == snap.snapshot_id, (stage, t)
+            assert entry == KGPipeline._table_record(snap), (stage, t)
+    assert {e["commit_mode"] for e in man["extract"]["tables"].values()} \
+        == {"append"}
 
     # identical KB, table by table (exact multiset equality)
     for t in ("triples", "mentions", "folded_mentions",

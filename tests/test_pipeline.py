@@ -1,7 +1,6 @@
 """End-to-end pipeline tests: full run, resume skip, crash/resume
-equivalence, idempotence (fixpoint), metrics presence."""
+equivalence, idempotence (fixpoint), stage-record metrics."""
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -38,7 +37,7 @@ def test_full_run_and_resume(spark, store):
     r1 = pipe.run()
     assert all(v == "ran" for v in r1.values())
     for t in ("triples", "linked_mentions", "canonical_map",
-              "statements", "nodes", "edges", "_metrics"):
+              "statements", "nodes", "edges"):
         assert store.exists(t), t
         assert store.current_snapshot(t).row_count > 0
 
@@ -76,17 +75,65 @@ def test_crash_resume_equivalence(spark, corpus, tmp_path):
         assert ha == hb, f"{t} differs between straight and crash/resume runs"
 
 
+def _assert_records_match_snapshots(pipe, store, stages):
+    """Every stage record's ``tables`` entry describes the snapshot its
+    ``outputs`` pins, which is the committed one."""
+    man = pipe._load_manifest()
+    for stage in stages:
+        rec = man[stage]
+        assert set(rec["tables"]) == set(rec["outputs"]), stage
+        for t, entry in rec["tables"].items():
+            snap = store.current_snapshot(t)
+            assert rec["outputs"][t] == snap.snapshot_id, (stage, t)
+            assert entry == KGPipeline._table_record(snap), (stage, t)
+
+
 def test_metrics_lineage_rows(spark, store):
-    KGPipeline(spark, store, _cfg()).run()
-    m = store.read(spark, "_metrics")
-    stages = {r.stage for r in m.select("stage").distinct().collect()}
-    assert stages == {"extract", "link", "canonicalize"}
-    assert m.filter(F.col("n_rows") < 0).count() == 0
-    assert m.filter(F.col("partition_id").isNull()).count() == 0
-    # commit mode surfaced per table (merge_mode when the commit was a
-    # merge — the scale-monitoring signal for silent full-rewrite merges)
-    modes = {r.commit_mode for r in m.select("commit_mode").distinct().collect()}
-    assert modes == {"write"}  # plain runs commit via write()
+    # a _metrics table left by an older library version is ignored
+    store.write(spark.createDataFrame([("extract", 5)], "stage string, "
+                                      "n_rows long"), "_metrics")
+    pipe = KGPipeline(spark, store, _cfg())
+    pipe.run()
+    man = pipe._load_manifest()
+    for stage in KGPipeline.STAGES:
+        tables = man[stage]["tables"]
+        assert set(tables) == set(KGPipeline._STAGE_IO[stage][1]), stage
+        for t, e in tables.items():
+            assert e["rows"] == store.current_snapshot(t).row_count, t
+            assert e["files"] >= 1 and e["bytes"] > 0, t
+            assert e["max_file_rows"] >= e["rows"] / e["files"], t
+            # merge_mode when the commit was a merge — the scale-
+            # monitoring signal for silent full-rewrite merges
+            assert e["commit_mode"] == "write", t  # plain runs write()
+    _assert_records_match_snapshots(pipe, store, KGPipeline.STAGES)
+    assert store.current_snapshot("_metrics").snapshot_id == 1
+
+
+def test_crash_inside_stage_keeps_record_consistent(spark, store):
+    """A commit that fails mid-stage leaves the stage unrecorded (its
+    sibling commits may land, the record does not), and the resumed run
+    reruns the stage and records exactly the committed snapshots."""
+    pipe = KGPipeline(spark, store, _cfg())
+    orig = store.write
+
+    def failing_write(df, table, *a, **kw):
+        if table == "nodes":
+            raise RuntimeError("injected crash writing nodes")
+        return orig(df, table, *a, **kw)
+
+    store.write = failing_write
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"):
+            pipe.run()
+    finally:
+        store.write = orig
+    man = pipe._load_manifest()
+    assert "canonicalize" not in man
+    assert {"extract", "link"} <= set(man)
+    r = pipe.run(resume=True)
+    assert r == {"extract": "skipped", "link": "skipped",
+                 "canonicalize": "ran"}
+    _assert_records_match_snapshots(pipe, store, KGPipeline.STAGES)
 
 
 def test_config_change_invalidates(spark, store):
@@ -115,40 +162,6 @@ def test_pipeline_star_cc_equivalent(spark, corpus, tmp_path):
     assert hashes["label-propagation"] == hashes["star"]
 
 
-def test_read_metrics_latest_per_stage(spark, store):
-    """The append-only metrics log keeps history; read_metrics collapses
-    to the latest run per (stage, table)."""
-    pipe = KGPipeline(spark, store, _cfg())
-    pipe.run()
-    pipe.run(resume=False)  # second full run appends a second metrics set
-    full = pipe.read_metrics(current_only=False)
-    cur = pipe.read_metrics()
-    assert full.count() > cur.count()
-    per = (cur.groupBy("stage", "table")
-           .agg(F.countDistinct("run_ts").alias("n")).collect())
-    assert all(r.n == 1 for r in per)
-
-
-def test_metrics_schema_migration_from_old_store(spark, store):
-    """A _metrics table written by an OLDER library version (no
-    commit_mode column) must not kill the run: the append path migrates
-    the old rows (NULL backfill) once and continues."""
-    pipe = KGPipeline(spark, store, _cfg())
-    # simulate the legacy table: write _metrics WITHOUT commit_mode
-    legacy = spark.createDataFrame(pd.DataFrame({
-        "partition_id": [0], "n_rows": [5], "stage": ["extract"],
-        "table": ["triples"], "config": ["deadbeef"], "run_ts": [1.0],
-    })).withColumn("n_rows", F.col("n_rows").cast("long"))
-    store.write(legacy, "_metrics")
-    pipe.run(resume=False)
-    m = store.read(spark, "_metrics")
-    assert "commit_mode" in m.columns
-    # legacy row survives, backfilled NULL; new rows carry a mode
-    old = m.filter(F.col("config") == "deadbeef").collect()
-    assert len(old) == 1 and old[0].commit_mode is None
-    assert m.filter(F.col("commit_mode") == "write").count() > 0
-
-
 def test_compact_table_preserves_resume(spark, store):
     """Maintenance compaction through the pipeline must not invalidate
     the resume manifest: after compact_table, every stage still skips."""
@@ -158,93 +171,13 @@ def test_compact_table_preserves_resume(spark, store):
     assert snap.properties["operation"] == "compact"
     # metrics must not misreport the maintenance commit as a merge
     assert "merge_mode" not in snap.properties
+    entry = pipe._load_manifest()["extract"]["tables"]["triples"]
+    assert entry == KGPipeline._table_record(snap)
+    assert entry["commit_mode"] == "compact"
     r = pipe.run()
     assert all(v == "skipped" for v in r.values()), r
     assert store.read(spark, "triples").count() == \
         store.current_snapshot("triples").row_count
-
-
-def test_metrics_migration_keeps_future_only_columns(spark, store):
-    """ADVICE r03: the drift migration must keep the UNION of columns —
-    a column that exists only in the pre-existing _metrics table (e.g.
-    written by a NEWER library version) survives the rewrite with NULL
-    backfill on the new rows, instead of being silently dropped."""
-    pipe = KGPipeline(spark, store, _cfg())
-    legacy = spark.createDataFrame(pd.DataFrame({
-        "partition_id": [0], "n_rows": [5], "stage": ["extract"],
-        "table": ["triples"], "config": ["deadbeef"], "run_ts": [1.0],
-        "future_col": ["kept"],
-    })).withColumn("n_rows", F.col("n_rows").cast("long"))
-    store.write(legacy, "_metrics")
-    pipe.run(resume=False)
-    m = store.read(spark, "_metrics")
-    assert "future_col" in m.columns
-    assert m.filter(F.col("future_col") == "kept").count() == 1
-    new = m.filter(F.col("config") != "deadbeef")
-    assert new.count() > 0
-    assert new.filter(F.col("future_col").isNotNull()).count() == 0
-
-
-def test_metrics_append_unrelated_error_not_swallowed(spark, store):
-    """Only SchemaDriftError triggers the migration; an unrelated
-    ValueError from append must surface, not cause a destructive
-    rewrite-then-retry."""
-    pipe = KGPipeline(spark, store, _cfg())
-    part = spark.createDataFrame(pd.DataFrame({
-        "partition_id": [0], "n_rows": [1], "stage": ["x"],
-        "table": ["t"], "config": ["c"], "commit_mode": ["write"],
-        "run_ts": [1.0]})).withColumn(
-            "n_rows", F.col("n_rows").cast("long"))
-    pipe._append_metrics(part)  # creates the table
-
-    def boom(df, table, properties=None):
-        raise ValueError("disk quota exceeded")
-
-    orig = store.append
-    store.append = boom
-    try:
-        with pytest.raises(ValueError, match="disk quota"):
-            pipe._append_metrics(part)
-    finally:
-        store.append = orig
-
-
-def test_deferred_metrics_join_all_and_retry(spark, store):
-    """_join_metrics must (a) retry a transiently-failed append once
-    synchronously — the row is restored, no error surfaces — and
-    (b) when one append fails persistently, still join EVERY other
-    pending future (no orphaned appends racing a later writer) before
-    raising."""
-    pipe = KGPipeline(spark, store, _cfg())
-
-    calls = {"flaky": 0, "ok": 0, "late": 0}
-
-    def flaky():
-        calls["flaky"] += 1
-        if calls["flaky"] == 1:
-            raise RuntimeError("transient append failure")
-
-    def ok():
-        calls["ok"] += 1
-
-    pipe._defer_metrics(flaky)
-    pipe._defer_metrics(ok)
-    pipe._join_metrics()  # transient: retried, no error
-    assert calls == {"flaky": 2, "ok": 1, "late": 0}
-    assert pipe._metrics_futs == []
-
-    def fatal():
-        raise RuntimeError("persistent append failure")
-
-    def late():
-        calls["late"] += 1
-
-    pipe._defer_metrics(fatal)
-    pipe._defer_metrics(late)
-    with pytest.raises(RuntimeError, match="persistent"):
-        pipe._join_metrics()
-    assert calls["late"] == 1  # the sibling append was joined, not orphaned
-    assert pipe._metrics_futs == []
 
 
 def test_ingest_rejects_unbucketed_transcripts_table(spark, corpus,
@@ -288,5 +221,12 @@ def test_ingest_flags_merge_fallback(spark, corpus, tmp_path,
              .distinct().limit(2).collect()]
     batch = corpus["transcripts"].filter(F.col("conv_id").isin(convs))
     pipe.ingest_stage1(batch)
-    flags = pipe._load_manifest()["_ingest"]["merge_fallbacks"]
+    man = pipe._load_manifest()
+    flags = man["_ingest"]["merge_fallbacks"]
     assert "triples" in flags and "prune limit" in flags["triples"]
+    # the extract record shows the merge mode of each flagged table
+    for t in flags:
+        if t in man["extract"]["tables"]:
+            assert man["extract"]["tables"][t]["commit_mode"] == \
+                "full-rewrite", t
+    _assert_records_match_snapshots(pipe, st, ["extract"])
