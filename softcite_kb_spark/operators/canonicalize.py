@@ -20,32 +20,70 @@ Reference analog:
   * edge re-pointing to canonical vertices + dedup (set_up_relations,
     knowledge_base.py:344-402) -> two canonical-map joins + dropDuplicates.
 
-Scale notes: label propagation shuffles once per iteration on the edge
-table; iterations = graph diameter (match graphs are near-star-shaped, so
-3-5). Each round ends at a materialization barrier so plans don't grow
-exponentially — the barrier is INJECTABLE (``materializer`` param, see
-softcite_kb_spark.materialize): localCheckpoint by default (single JVM),
-a scratch-table persist on a cluster (localCheckpoint blocks are
-executor-local — a lost executor would kill a 10-round CC job at round 9).
+Scale notes: CC runs on the surface-entity graph (O(distinct surfaces)
+nodes). Below ``CC_LOCAL_EDGE_LIMIT`` per-surface rows the surface ->
+canonical map is built on the driver from one bounded collect and
+returned as an Arrow ``LocalRelation``; the join back broadcasts it with
+no Spark job. Above the gate, or with an explicit ``materializer``, the
+distributed path runs: label propagation shuffles once per iteration on
+the edge table; iterations = graph diameter (match graphs are
+near-star-shaped, so 3-5). Each round ends at a materialization barrier
+so plans don't grow exponentially — the barrier is INJECTABLE
+(``materializer`` param, see softcite_kb_spark.materialize):
+localCheckpoint by default (single JVM), a scratch-table persist on a
+cluster (localCheckpoint blocks are executor-local — a lost executor
+would kill a 10-round CC job at round 9).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from softcite_kb_spark.functions.text import norm_name
 from softcite_kb_spark.materialize import (
     Materializer, local_checkpoint_materializer)
 
 
-#: default edge-count gate for the driver-side CC fast path: below this
-#: many (normalized, distinct) edges the iterative dataframe rounds are
-#: pure fixed cost — ~10 jobs for a graph union-find closes in
-#: microseconds. 100k edges collect to a few MB on the driver.
+#: default gate for the driver-side fast paths: below this many
+#: (normalized, distinct) CC edges, or collected per-surface rows in
+#: :func:`surface_canonical_map`, the distributed rounds are pure fixed
+#: cost — ~10 jobs for a graph union-find closes in microseconds. 100k
+#: rows collect to a few MB on the driver.
 CC_LOCAL_EDGE_LIMIT = 100_000
+
+
+def _local_frame(spark, schema: T.StructType, cols: dict) -> DataFrame:
+    """Driver-side columns as a DataFrame through the Arrow path: the
+    plan is a ``LocalRelation``, so broadcasting it needs no Spark job
+    (a parallelized Python list is a ``LogicalRDD``, whose broadcast
+    runs one)."""
+    table = pa.Table.from_pydict(cols, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
+def _union_find(pairs) -> dict:
+    """vertex -> root of its component, over an iterable of (a, b)
+    edges."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        if ra != rb:
+            parent[rb] = ra
+    return {v: find(v) for v in parent}
 
 
 def _cc_local(e: DataFrame, limit: int) -> DataFrame | None:
@@ -69,36 +107,17 @@ def _cc_local(e: DataFrame, limit: int) -> DataFrame | None:
     rows = e.limit(limit + 1).collect()
     if len(rows) > limit:
         return None
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in rows:
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
+    roots = _union_find(rows)
     comp_min: dict = {}
-    for v in parent:
-        r = find(v)
-        m = comp_min.get(r)
-        if m is None or v < m:
-            comp_min[r] = v
-    out_rows = [(v, comp_min[find(v)]) for v in parent]
+    for v, r in roots.items():
+        comp_min[r] = min(comp_min.get(r, v), v)
     schema = T.StructType([
         T.StructField("member_id", e.schema[0].dataType),
         T.StructField("component_id", e.schema[1].dataType),
     ])
-    return e.sparkSession.createDataFrame(out_rows, schema)
+    return _local_frame(e.sparkSession, schema, {
+        "member_id": list(roots),
+        "component_id": [comp_min[r] for r in roots.values()]})
 
 
 def connected_components(
@@ -310,124 +329,72 @@ def mention_node_id(conv_id, norm_surface) -> F.Column:
     return F.concat(F.lit("m:"), F.sha2(F.concat_ws("\x1f", conv_id, norm_surface), 256).substr(1, 24))
 
 
-def match_pairs(linked_mentions: DataFrame) -> DataFrame:
-    """Build the match-pair edge list feeding CC.
+def _surface_canon_local(surfaces: DataFrame, limit: int,
+                         schema: T.StructType) -> DataFrame | None:
+    """Driver path of :func:`surface_canonical_map` (``None`` past
+    ``limit`` rows): the same rule on the same "s:"/"e:" string ids,
+    so every ``min`` compares exactly as Spark's does."""
+    rows = surfaces.select("norm_surface", "srep", "entity_id") \
+        .limit(limit + 1).collect()
+    if len(rows) > limit:
+        return None
+    srep: dict = {}
+    edges = []
+    for s, r, e in rows:
+        cur = srep.get(s)
+        srep[s] = r if cur is None or (r is not None and r < cur) else cur
+        if s is not None and e is not None:
+            edges.append(("s:" + s, "e:" + e))
+    roots = _union_find(edges)
+    hub: dict = {}
+    comp_min: dict = {}
+    for v, root in roots.items():
+        if v.startswith("e:"):
+            hub[root] = min(hub.get(root, v), v)
+        elif srep[v[2:]] is not None:
+            r = srep[v[2:]]
+            comp_min[root] = min(comp_min.get(root, r), r)
+    canon = []
+    for s, r in srep.items():
+        root = roots.get("s:" + s) if s is not None else None
+        canon.append(next((v for v in (hub.get(root), comp_min.get(root), r)
+                           if v is not None), None))
+    return _local_frame(surfaces.sparkSession, schema, {
+        "norm_surface": list(srep), "canonical_id": canon})
 
-    Two pair sources (both avoid O(group^2) blowup by linking every member
-    to one deterministic representative — a star, which CC closes
-    transitively):
 
-      * mention-groups linked to the same authority entity -> edge
-        (node_id, "e:<entity_id>") — the entity id acts as the hub.
-      * same normalized surface across conversations (linked or not) ->
-        edge (node_id, min node_id over the surface) — the exact-name
-        conflation of merge.py J4 without variants (variants already
-        collapsed into norm_surface upstream).
+def surface_canonical_map(surfaces: DataFrame, max_iter: int = 25,
+                          algorithm: str = "label-propagation",
+                          star_rounds: int = 50,
+                          materializer: Materializer | None = None
+                          ) -> DataFrame:
+    """(norm_surface, canonical_id) for every surface of ``surfaces``,
+    a (norm_surface, srep, entity_id) frame: one row per surface and
+    linked entity, ``srep`` = the surface's min mention-group node id
+    (the min over its rows is used), ``entity_id`` null when unlinked.
+
+    CC runs over the "s:<surface>" — "e:<entity>" edges; a surface's
+    canonical id is its component's entity hub (min "e:<entity>"),
+    else the component's min ``srep``, else its own ``srep``.
+
+    Below ``CC_LOCAL_EDGE_LIMIT`` rows under the default barrier the
+    map is built on the driver from one bounded collect (``limit(n+1)``)
+    and returned as a ``LocalRelation`` (no Spark job to broadcast it).
+    Above the gate, or with an explicit ``materializer``, CC runs
+    distributed with ``algorithm``/``max_iter``/``star_rounds`` (see
+    :func:`canonical_map`).
     """
-    nodes = linked_mentions.withColumn(
-        "node_id", mention_node_id(F.col("conv_id"), F.col("norm_surface")))
-
-    by_entity = (
-        nodes.filter(F.col("entity_id").isNotNull())
-        .select("node_id", F.concat(F.lit("e:"), F.col("entity_id")).alias("hub"))
-    )
-    # per-surface representative via groupBy (map-side partial min) + join
-    # back — a window over norm_surface would funnel every row of a hot
-    # surface through one reducer (the "R"-name skew, merge.py:186-189)
-    reps = nodes.groupBy("norm_surface").agg(F.min("node_id").alias("hub"))
-    by_surface = (
-        nodes.join(reps, "norm_surface")
-        .filter(F.col("hub") != F.col("node_id"))
-        .select("node_id", "hub")
-    )
-    return (
-        by_entity.unionByName(by_surface)
-        .select(F.col("node_id").alias("src"), F.col("hub").alias("dst"))
-    )
-
-
-def canonical_map_group_level(
-        linked_mentions: DataFrame, max_iter: int = 25,
-        algorithm: str = "label-propagation",
-        star_rounds: int = 50,
-        materializer: Materializer | None = None) -> DataFrame:
-    """REFERENCE implementation of :func:`canonical_map`: CC over the
-    full GROUP-level match-pair graph (one node per conversation
-    mention group). Semantically general but its node count is
-    O(mention groups) = O(corpus); the production path collapses to
-    surface granularity (see canonical_map) and is pinned equal to
-    this one by tests."""
-    nodes = linked_mentions.withColumn(
-        "node_id", mention_node_id(F.col("conv_id"), F.col("norm_surface")))
-    pairs = match_pairs(linked_mentions)
-    if algorithm == "star":
-        cc = connected_components_star(pairs, max_rounds=star_rounds,
-                                       materializer=materializer)
-    else:
-        cc = connected_components(pairs, max_iter=max_iter,
-                                  materializer=materializer)
-
-    # prefer the entity hub as the canonical representative of a component
-    hubs = (
-        cc.filter(F.col("member_id").startswith("e:"))
-        .groupBy("component_id")
-        .agg(F.min("member_id").alias("entity_hub"))
-    )
-    cc = (
-        cc.join(hubs, "component_id", "left")
-        .select("member_id",
-                F.coalesce("entity_hub", "component_id").alias("canonical_id"))
-    )
-    out = (
-        nodes.join(cc, nodes.node_id == cc.member_id, "left")
-        .drop("member_id")
-        .withColumn("canonical_id", F.coalesce("canonical_id", "node_id"))
-    )
-    return out
-
-
-def canonical_map(linked_mentions: DataFrame, max_iter: int = 25,
-                  algorithm: str = "label-propagation",
-                  star_rounds: int = 50,
-                  materializer: Materializer | None = None) -> DataFrame:
-    """(node_id, conv_id, norm_surface, entity_id, canonical_id).
-
-    canonical_id prefers a component's authority-entity hub ("e:Qxx") if the
-    component contains one — matching the reference's rule that merges
-    anchor on the curated entity — else the min mention node id.
-    Singleton mention-groups (no pairs) are their own canonical.
-
-    Scale collapse (same observation that factorized the stage-2 vote):
-    in the group-level match graph every conversation group of surface s
-    hangs as a LEAF off its surface representative, and all of s's
-    groups share one accepted entity — so component structure is fully
-    determined by the SURFACE <-> entity graph. CC therefore runs on
-    "s:<surface>" / "e:<entity>" nodes — O(distinct surfaces), not
-    O(mention groups) — and component ids propagate back to groups by a
-    single join on norm_surface. Canonical selection is exact: the
-    entity hub if the component has one, else the min group node id
-    across the component's surfaces (per-surface min via map-side
-    groupBy — the hot-surface "R" skew never funnels a window).
-    The group-level path remains as
-    :func:`canonical_map_group_level`; equality is pinned by tests.
-
-    ``algorithm``: "label-propagation" (O(diameter) rounds — right for the
-    near-star graphs blocking emits; budget = ``max_iter``) or "star"
-    (large-star/small-star, O(log n) rounds on any topology — the
-    defensive choice when edge data may contain long chains; budget =
-    ``star_rounds``, a separate knob because star rounds and LP iterations
-    are different units and the star path REFUSES to return non-converged
-    labelings). ``materializer`` is the per-round lineage barrier,
-    threaded to whichever CC runs (scratch tables on a cluster).
-    """
-    nodes = linked_mentions.withColumn(
-        "node_id", mention_node_id(F.col("conv_id"), F.col("norm_surface")))
-    # per-surface min group node id — the rep every group of s links to
-    # in the group-level graph, and the fallback canonical id
-    sreps = nodes.groupBy("norm_surface").agg(
-        F.min("node_id").alias("srep"))
+    schema = T.StructType([
+        T.StructField("norm_surface", surfaces.schema["norm_surface"].dataType),
+        T.StructField("canonical_id", T.StringType()),
+    ])
+    if materializer is None and CC_LOCAL_EDGE_LIMIT > 0:
+        local = _surface_canon_local(surfaces, CC_LOCAL_EDGE_LIMIT, schema)
+        if local is not None:
+            return local
+    sreps = surfaces.groupBy("norm_surface").agg(F.min("srep").alias("srep"))
     sedges = (
-        nodes.filter(F.col("entity_id").isNotNull())
+        surfaces.filter(F.col("entity_id").isNotNull())
         .select(F.concat(F.lit("s:"), F.col("norm_surface")).alias("src"),
                 F.concat(F.lit("e:"), F.col("entity_id")).alias("dst"))
         .distinct()
@@ -448,15 +415,15 @@ def canonical_map(linked_mentions: DataFrame, max_iter: int = 25,
         .groupBy("component_id")
         .agg(F.min("member_id").alias("entity_hub"))
     )
-    # min group node id per component (fallback canonical when a
-    # component somehow has no entity hub — possible if CC input edges
-    # are extended with surface<->surface pairs later)
+    # min srep per component (fallback canonical when a component
+    # somehow has no entity hub — possible if CC input edges are
+    # extended with surface<->surface pairs later)
     comp_min = (
         sreps.join(scomp, "norm_surface")
         .groupBy("component_id")
         .agg(F.min("srep").alias("comp_min"))
     )
-    surface_canon = (
+    return (
         sreps.join(scomp, "norm_surface", "left")
         .join(hubs, "component_id", "left")
         .join(comp_min, "component_id", "left")
@@ -465,6 +432,52 @@ def canonical_map(linked_mentions: DataFrame, max_iter: int = 25,
             F.coalesce("entity_hub", "comp_min", "srep")
             .alias("canonical_id"))
     )
+
+
+def canonical_map(linked_mentions: DataFrame, max_iter: int = 25,
+                  algorithm: str = "label-propagation",
+                  star_rounds: int = 50,
+                  materializer: Materializer | None = None) -> DataFrame:
+    """(node_id, conv_id, norm_surface, entity_id, canonical_id).
+
+    canonical_id prefers a component's authority-entity hub ("e:Qxx") if the
+    component contains one — matching the reference's rule that merges
+    anchor on the curated entity — else the min mention node id.
+    Singleton mention-groups (no pairs) are their own canonical.
+
+    Scale collapse (same observation that factorized the stage-2 vote):
+    in the group-level match graph every conversation group of surface s
+    hangs as a LEAF off its surface representative, and all of s's
+    groups share one accepted entity — so component structure is fully
+    determined by the SURFACE <-> entity graph. CC therefore runs on
+    "s:<surface>" / "e:<entity>" nodes — O(distinct surfaces), not
+    O(mention groups) — in :func:`surface_canonical_map`, and canonical
+    ids propagate back to groups by a single join on norm_surface.
+    Canonical selection is exact: the entity hub if the component has
+    one, else the min group node id across the component's surfaces
+    (per-surface min via map-side groupBy — the hot-surface "R" skew
+    never funnels a window); tests pin it equal to a group-level oracle.
+
+    Below ``CC_LOCAL_EDGE_LIMIT`` (surface, entity) rows under the
+    default barrier the surface map is built on the driver and the join
+    back broadcasts it; the CC knobs below apply only above that gate
+    or with an explicit ``materializer``. ``algorithm``: "label-propagation"
+    (O(diameter) rounds — right for the near-star graphs blocking emits;
+    budget = ``max_iter``) or "star" (large-star/small-star, O(log n)
+    rounds on any topology — the defensive choice when edge data may
+    contain long chains; budget = ``star_rounds``, a separate knob
+    because star rounds and LP iterations are different units and the
+    star path REFUSES to return non-converged labelings).
+    ``materializer`` is the per-round lineage barrier, threaded to
+    whichever CC runs (scratch tables on a cluster).
+    """
+    nodes = linked_mentions.withColumn(
+        "node_id", mention_node_id(F.col("conv_id"), F.col("norm_surface")))
+    surfaces = nodes.groupBy("norm_surface", "entity_id").agg(
+        F.min("node_id").alias("srep"))
+    surface_canon = surface_canonical_map(
+        surfaces, max_iter=max_iter, algorithm=algorithm,
+        star_rounds=star_rounds, materializer=materializer)
     return nodes.join(surface_canon, "norm_surface", "left") \
         .withColumn("canonical_id", F.coalesce("canonical_id",
                                                F.col("node_id")))

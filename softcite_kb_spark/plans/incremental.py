@@ -268,36 +268,19 @@ class IncrementalKGPipeline(KGPipeline):
 
     def _surface_canon_from_state(self, accepted: DataFrame,
                                   stats: DataFrame) -> DataFrame:
-        """(norm_surface, canonical_id) for EVERY surface — CC over the
-        accepted surface-entity edges (cz.canonical_map's surface
-        collapse, recomputed globally: O(accepted surfaces)), entity
-        hub preferred, else component-min srep, else own srep."""
-        sedges = accepted.select(
-            F.concat(F.lit("s:"), F.col("norm_surface")).alias("src"),
-            F.concat(F.lit("e:"), F.col("entity_id")).alias("dst"))
-        if self.config.cc_algorithm == "star":
-            cc = cz.connected_components_star(
-                sedges, materializer=self.materializer)
-        else:
-            cc = cz.connected_components(
-                sedges, max_iter=self.config.cc_max_iter,
-                materializer=self.materializer)
-        scomp = (cc.filter(F.col("member_id").startswith("s:"))
-                 .select(F.expr("substring(member_id, 3)")
-                         .alias("norm_surface"), "component_id"))
-        hubs = (cc.filter(F.col("member_id").startswith("e:"))
-                .groupBy("component_id")
-                .agg(F.min("member_id").alias("entity_hub")))
-        sreps = stats.select("norm_surface", "srep")
-        comp_min = (sreps.join(scomp, "norm_surface")
-                    .groupBy("component_id")
-                    .agg(F.min("srep").alias("comp_min")))
-        return (sreps.join(scomp, "norm_surface", "left")
-                .join(hubs, "component_id", "left")
-                .join(comp_min, "component_id", "left")
-                .select("norm_surface",
-                        F.coalesce("entity_hub", "comp_min", "srep")
-                        .alias("canonical_id")))
+        """(norm_surface, canonical_id) for EVERY surface of ``stats`` —
+        ``cz.surface_canonical_map`` (the surface collapse
+        ``cz.canonical_map`` runs, recomputed globally: O(accepted
+        surfaces)) over each surface's ``srep`` and accepted entity:
+        built on the driver below ``cz.CC_LOCAL_EDGE_LIMIT`` surfaces
+        with the default barrier, else CC runs distributed."""
+        surfaces = stats.select("norm_surface", "srep").join(
+            accepted.select("norm_surface", "entity_id"), "norm_surface",
+            "left")
+        return cz.surface_canonical_map(
+            surfaces, max_iter=self.config.cc_max_iter,
+            algorithm=self.config.cc_algorithm,
+            materializer=self.materializer)
 
     def _node_columns(self) -> list[str]:
         return [f.name for f in

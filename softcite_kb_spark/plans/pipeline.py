@@ -634,7 +634,10 @@ class KGPipeline:
         triples = self.store.read(self.spark, "triples").drop("bucket")
         auth = self.store.read(self.spark, "authority_entities")
         bc = self._broadcast_decision(auth)
-        # one materialized canonical-map frame feeds its own commit AND
+        # below cz.CC_LOCAL_EDGE_LIMIT surface rows (and with no
+        # materializer) canonical_map builds the surface map on the driver
+        # and broadcasts it; above it CC runs distributed. One
+        # materialized canonical-map frame feeds its own commit AND
         # the three downstream builds (identical rows to the previous
         # write-then-read-back — the barrier computes CC once, and
         # every consumer is order-insensitive relational fold/join work).

@@ -27,6 +27,65 @@ def _union_find(pairs):
     return {x: find(x) for x in parent}
 
 
+def _match_pairs(linked_mentions):
+    """Group-level match-pair edges (oracle): every mention group links
+    to its entity hub "e:<entity_id>" and to its surface's min group
+    node id — stars, which CC closes transitively."""
+    nodes = linked_mentions.withColumn(
+        "node_id", cz.mention_node_id(F.col("conv_id"), F.col("norm_surface")))
+    by_entity = (
+        nodes.filter(F.col("entity_id").isNotNull())
+        .select("node_id", F.concat(F.lit("e:"), F.col("entity_id")).alias("hub"))
+    )
+    reps = nodes.groupBy("norm_surface").agg(F.min("node_id").alias("hub"))
+    by_surface = (
+        nodes.join(reps, "norm_surface")
+        .filter(F.col("hub") != F.col("node_id"))
+        .select("node_id", "hub")
+    )
+    return (
+        by_entity.unionByName(by_surface)
+        .select(F.col("node_id").alias("src"), F.col("hub").alias("dst"))
+    )
+
+
+def _canonical_map_group_level(linked_mentions, algorithm="label-propagation"):
+    """Oracle for cz.canonical_map: CC over the full GROUP-level match
+    graph (one node per conversation mention group, O(corpus) nodes),
+    entity hub preferred, else the component's min node id."""
+    nodes = linked_mentions.withColumn(
+        "node_id", cz.mention_node_id(F.col("conv_id"), F.col("norm_surface")))
+    pairs = _match_pairs(linked_mentions)
+    if algorithm == "star":
+        cc = cz.connected_components_star(pairs)
+    else:
+        cc = cz.connected_components(pairs)
+    hubs = (
+        cc.filter(F.col("member_id").startswith("e:"))
+        .groupBy("component_id")
+        .agg(F.min("member_id").alias("entity_hub"))
+    )
+    cc = (
+        cc.join(hubs, "component_id", "left")
+        .select("member_id",
+                F.coalesce("entity_hub", "component_id").alias("canonical_id"))
+    )
+    return (
+        nodes.join(cc, nodes.node_id == cc.member_id, "left")
+        .drop("member_id")
+        .withColumn("canonical_id", F.coalesce("canonical_id", "node_id"))
+    )
+
+
+def _plan_node(df):
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+
+
+def _assert_same_rows(a, b, msg=""):
+    assert a.schema == b.schema, msg
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), msg
+
+
 def test_cc_matches_union_find_oracle(spark):
     # chain + star + singleton-pair graph
     pairs = [("a", "b"), ("b", "c"), ("c", "d"),          # chain
@@ -280,6 +339,9 @@ def test_cc_local_fast_path_equals_distributed(spark):
                for r in cz.connected_components(
                    df, local_threshold=0).collect()}
     assert local == dist_star == dist_lp == _union_find(pairs)
+    # the driver result is an Arrow LocalRelation (broadcast needs no
+    # job), not a parallelized LogicalRDD
+    assert _plan_node(cz.connected_components(df)) == "LocalRelation"
     # threshold smaller than the edge count -> distributed path taken
     # (observable: same labeling, and _cc_local itself returns None)
     e = df.selectExpr("src as a", "dst as b").distinct()
@@ -307,11 +369,12 @@ def test_build_nodes_label_most_frequent_raw(spark):
 
 
 def test_canonical_map_surface_collapse_equals_group_level(spark, corpus):
-    """The surface-granularity CC (production canonical_map) must equal
-    the group-level reference (canonical_map_group_level) EXACTLY —
-    same canonical for every mention group — under both CC algorithms
-    and with unlinked surfaces present."""
+    """The surface-granularity canonical_map must equal the group-level
+    oracle EXACTLY — same canonical for every mention group — under both
+    CC algorithms, on the driver path and on the distributed path (an
+    explicit materializer), with unlinked surfaces present."""
     from softcite_kb_spark import datagen
+    from softcite_kb_spark.materialize import local_checkpoint_materializer
     from softcite_kb_spark.operators import extraction as ex
     from softcite_kb_spark.operators import linking as lk
 
@@ -320,14 +383,140 @@ def test_canonical_map_surface_collapse_equals_group_level(spark, corpus):
     folded = ex.fold_mentions(ex.mentions_from_triples(triples))
     linked = lk.link_mentions(
         folded, corpus["authority_entities"], corpus["authority_ids"],
-        triples, min_total=1)
+        triples, min_total=1).localCheckpoint()
     assert linked.filter(F.col("entity_id").isNull()).count() > 0
     for algorithm in ("label-propagation", "star"):
-        ref = cz.canonical_map_group_level(linked, algorithm=algorithm)
-        got = cz.canonical_map(linked, algorithm=algorithm)
+        ref = _canonical_map_group_level(linked, algorithm=algorithm)
         cols = sorted(ref.columns)
-        assert sorted(got.columns) == cols
-        assert got.count() == ref.count()
-        a, b = got.select(*cols), ref.select(*cols)
-        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), \
-            algorithm
+        for mat in (None, local_checkpoint_materializer):
+            got = cz.canonical_map(linked, algorithm=algorithm,
+                                   materializer=mat)
+            assert sorted(got.columns) == cols
+            assert got.count() == ref.count()
+            a, b = got.select(*cols), ref.select(*cols)
+            assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), \
+                (algorithm, mat)
+
+
+#: hand-built linked mentions (conv_id, norm_surface, entity_id) covering
+#: the canonical-selection cases
+_EDGE_CASES = [
+    # one surface linked to two entities bridges their components
+    ("c1", "alpha", "Q1"), ("c2", "alpha", "Q2"),
+    ("c3", "beta", "Q2"), ("c1", "gamma", "Q1"),
+    # one entity shared by several surfaces, each in several convs
+    ("c1", "delta", "Q3"), ("c2", "delta", "Q3"),
+    ("c3", "epsilon", "Q3"), ("c4", "zeta", "Q3"), ("c5", "zeta", "Q3"),
+    # unlinked surfaces (null entity_id), one of them in two convs
+    ("c1", "eta", None), ("c2", "eta", None), ("c4", "theta", None),
+    # a surface linked in one conv and unlinked in another
+    ("c1", "iota", "Q4"), ("c7", "iota", None),
+    # null norm_surface; linking joins on the surface, so it never
+    # carries an entity
+    ("c5", None, None), ("c6", None, None),
+    # non-ASCII: the hub is the min in code-point order (Python) ==
+    # UTF-8 byte order (Spark); UTF-16 order would put U+1F600 (a
+    # surrogate pair) before U+FF31
+    ("c1", "naïve", "\U0001F600x"), ("c2", "naïve", "\uFF31x"),
+    ("c3", "zürich", "Qé"), ("c4", "zürich", "Qz"),
+    ("c5", "日本語", None), ("c6", "ßtest", None),
+]
+
+
+def _edge_case_linked(spark):
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("norm_surface", T.StringType()),
+        T.StructField("entity_id", T.StringType()),
+        T.StructField("n_mentions", T.LongType()),
+    ])
+    return spark.createDataFrame(
+        [(c, s, e, 1) for c, s, e in _EDGE_CASES], schema)
+
+
+def test_canonical_map_paths_equal_on_edge_cases(spark):
+    """canonical_map's driver path, its distributed path (explicit
+    materializer) and the group-level oracle agree row for row, schema
+    included, on bridging, shared-entity, unlinked, null and non-ASCII
+    cases; the driver path's surface map is a LocalRelation that the
+    join back broadcasts."""
+    from softcite_kb_spark.materialize import local_checkpoint_materializer
+
+    linked = _edge_case_linked(spark)
+    drv = cz.canonical_map(linked)
+    dist = cz.canonical_map(linked, materializer=local_checkpoint_materializer)
+    _assert_same_rows(drv, dist)
+    ref = _canonical_map_group_level(linked)
+    _assert_same_rows(drv, ref.select(*drv.columns))
+    got = {(r.conv_id, r.norm_surface): r.canonical_id for r in drv.collect()}
+    assert got[("c2", "alpha")] == got[("c3", "beta")] == "e:Q1"
+    assert got[("c4", "zeta")] == got[("c1", "delta")] == "e:Q3"
+    assert got[("c7", "iota")] == "e:Q4"
+    assert got[("c1", "naïve")] == "e:\uFF31x"
+    assert got[("c3", "zürich")] == "e:Qz"
+    assert got[("c1", "eta")] == got[("c2", "eta")] != got[("c4", "theta")]
+    assert got[("c5", None)] != got[("c6", None)]
+    assert "BroadcastHashJoin" in \
+        drv._jdf.queryExecution().executedPlan().toString()
+
+
+def test_surface_canon_from_state_paths_equal(spark, tmp_path):
+    """The incremental pipeline's state call goes through the same
+    surface map: driver path == distributed path (explicit
+    materializer) for every surface, null included, and both equal the
+    group-level oracle's per-surface canonical."""
+    from softcite_kb_spark.materialize import local_checkpoint_materializer
+    from softcite_kb_spark.plans.incremental import IncrementalKGPipeline
+    from softcite_kb_spark.plans.pipeline import PipelineConfig
+    from softcite_kb_spark.storage import TableStore
+
+    linked = _edge_case_linked(spark)
+    cfg = PipelineConfig(partition_buckets=4)
+    store = TableStore(str(tmp_path / "kb"))
+    drv_pipe = IncrementalKGPipeline(spark, store, cfg)
+    dist_pipe = IncrementalKGPipeline(
+        spark, store, cfg, materializer=local_checkpoint_materializer)
+    stats = drv_pipe._stats_for(linked)
+    accepted = linked.filter(F.col("entity_id").isNotNull()) \
+        .select("norm_surface", "entity_id").distinct()
+    drv = drv_pipe._surface_canon_from_state(accepted, stats)
+    assert _plan_node(drv) == "LocalRelation"
+    dist = dist_pipe._surface_canon_from_state(accepted, stats)
+    _assert_same_rows(drv, dist)
+    ref = (_canonical_map_group_level(linked)
+           .filter(F.col("norm_surface").isNotNull())
+           .select("norm_surface", "canonical_id").distinct())
+    assert ref.count() == ref.select("norm_surface").distinct().count()
+    _assert_same_rows(drv.filter(F.col("norm_surface").isNotNull()), ref)
+    null_canon = [r.canonical_id for r in drv.collect()
+                  if r.norm_surface is None]
+    assert null_canon == [stats.filter(F.col("norm_surface").isNull())
+                          .first().srep]
+
+
+def test_surface_canonical_map_gate_falls_back_to_distributed(
+        spark, monkeypatch):
+    """With CC_LOCAL_EDGE_LIMIT below the surface row count the bounded
+    collect bails and the distributed path runs, with identical rows."""
+    linked = _edge_case_linked(spark)
+    drv = cz.canonical_map(linked)
+    calls = []
+    real_cc = cz.connected_components
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real_cc(*args, **kwargs)
+
+    monkeypatch.setattr(cz, "connected_components", spy)
+    monkeypatch.setattr(cz, "CC_LOCAL_EDGE_LIMIT", 3)
+    nodes = linked.withColumn("node_id", cz.mention_node_id(
+        F.col("conv_id"), F.col("norm_surface")))
+    surfaces = nodes.groupBy("norm_surface", "entity_id").agg(
+        F.min("node_id").alias("srep"))
+    sc = cz.surface_canonical_map(surfaces)
+    assert calls and _plan_node(sc) != "LocalRelation"
+    gated = cz.canonical_map(linked)
+    assert len(calls) == 2
+    _assert_same_rows(gated, drv)
