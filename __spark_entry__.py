@@ -798,23 +798,6 @@ def q43_asof_join(spark, sf_dir):
     )
 
 
-def q36_claims_json_export(spark, sf_dir):
-    """P8 export converter: statement rows -> nested Wikidata-style claims
-    JSON (kb/converter.py analog; rows-only — JSON text formatting is
-    engine-specific)."""
-    from softcite_kb_spark.kb.converter import to_claims_json
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 2000)
-    stmts = li.select(
-        F.col("l_partkey").alias("canonical_id"),
-        F.lit("supplier").alias("prop"),
-        F.col("l_suppkey").cast("string").alias("value"),
-        F.lit("string").alias("datatype"),
-        F.col("l_returnflag").alias("source"),
-        F.col("l_quantity").cast("long").alias("count"),
-    )
-    return to_claims_json(stmts)
-
-
 def q37_search_flatten(spark, sf_dir):
     """P6/S11 search flatten over a KB synthesized from lineitem; array/map
     columns rendered as deterministic scalars (concat_ws / to_json) so the
@@ -912,28 +895,6 @@ def q41_search_facets(spark, sf_dir):
              F.count("*").cast("long").alias("n_mentions"))
     )
     return facets(flat, ["entity_type", "langs"], k=10)
-
-
-def q42_wikidata_export(spark, sf_dir):
-    """P8 vanilla-Wikidata export (to_wikidata): language-level re-expansion
-    + nested claims, JSON rebuilt byte-for-byte by the oracle."""
-    from softcite_kb_spark.kb.converter import to_wikidata
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 2000)
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 50)
-    nodes = p.select(
-        F.col("p_partkey").alias("canonical_id"),
-        F.col("p_name").alias("label"),
-        F.array("p_brand").alias("aliases"),
-    )
-    stmts = li.select(
-        F.col("l_partkey").alias("canonical_id"),
-        F.lit("supplier").alias("prop"),
-        F.col("l_suppkey").cast("string").alias("value"),
-        F.lit("string").alias("datatype"),
-        F.col("l_returnflag").alias("source"),
-        F.col("l_quantity").cast("long").alias("count"),
-    )
-    return to_wikidata(nodes, stmts)
 
 
 def q44_range_join(spark, sf_dir):
@@ -1328,13 +1289,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q33_capitalized_variant": q33_capitalized_variant,
         "q34_hyphen_variant": q34_hyphen_variant,
         "q35_event_sessions": q35_event_sessions,
-        "q36_claims_json_export": q36_claims_json_export,
         "q37_search_flatten": q37_search_flatten,
         "q38_gazetteer_mentions": q38_gazetteer_mentions,
         "q39_emb_most_similar_pairs": q39_emb_most_similar_pairs,
         "q40_ivf_topk": q40_ivf_topk,
         "q41_search_facets": q41_search_facets,
-        "q42_wikidata_export": q42_wikidata_export,
         "q43_asof_join": q43_asof_join,
         "q44_range_join": q44_range_join,
         "q45_hypertable_rollup": q45_hypertable_rollup,
@@ -2298,35 +2257,6 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT * FROM f1 UNION ALL SELECT * FROM f2
         """,
-        # q42: to_wikidata JSON rebuilt byte-for-byte — id unquoted
-        # (numeric), labels/aliases wrapped under "en", descriptions
-        # omitted (null field), claims nested as q36
-        "q42_wikidata_export": """
-            WITH nodes AS (
-              SELECT p_partkey AS entity_id, p_name AS label, p_brand
-              FROM part WHERE p_partkey < 50
-            ), s AS (
-              SELECT l_partkey AS entity_id, l_suppkey::VARCHAR AS value,
-                     l_returnflag AS source, l_quantity::BIGINT AS count
-              FROM lineitem WHERE l_orderkey < 2000
-            ), per AS (
-              SELECT entity_id,
-                     string_agg('{"value":"' || value
-                                || '","datatype":"string","references":[{"P248":"'
-                                || source || '","count":' || count || '}]}',
-                                ',' ORDER BY value, source, count) AS arr
-              FROM s GROUP BY 1
-            )
-            SELECT n.entity_id,
-                   '{"id":' || n.entity_id
-                   || ',"type":"item","labels":{"en":"' || n.label
-                   || '"},"aliases":{"en":["' || n.p_brand || '"]}'
-                   || CASE WHEN p.arr IS NOT NULL
-                        THEN ',"claims":{"supplier":[' || p.arr || ']}'
-                        ELSE '' END
-                   || '}' AS entity_json
-            FROM nodes n LEFT JOIN per p USING (entity_id)
-        """,
         # q27: decoded fields reconstructed relationally from documents —
         # header fields are modular functions of doc_id, checksum is the
         # byte sum of the (ASCII) text body mod 2^31
@@ -2341,25 +2271,6 @@ def oracle_sql() -> dict[str, str]:
                                                   c -> ascii(c)), 'sum')
                     % 2147483648)::BIGINT AS checksum
             FROM documents
-        """,
-        # q36: Spark's to_json rendering rebuilt byte-for-byte — struct
-        # field order (value, datatype, references) and sort_array's
-        # lexicographic struct order become ORDER BY value, source, count
-        "q36_claims_json_export": """
-            WITH s AS (
-              SELECT l_partkey AS entity_id, l_suppkey::VARCHAR AS value,
-                     l_returnflag AS source, l_quantity::BIGINT AS count
-              FROM lineitem WHERE l_orderkey < 2000
-            ), per AS (
-              SELECT entity_id,
-                     string_agg('{"value":"' || value
-                                || '","datatype":"string","references":[{"P248":"'
-                                || source || '","count":' || count || '}]}',
-                                ',' ORDER BY value, source, count) AS arr
-              FROM s GROUP BY 1
-            )
-            SELECT entity_id, '{"supplier":[' || arr || ']}' AS claims_json
-            FROM per
         """,
         "q39_emb_most_similar_pairs": """
             WITH e AS (

@@ -33,21 +33,17 @@ from pyspark.sql import types as T
 
 from typing import Callable
 
+from softcite_kb_spark.materialize import Materializer
 from softcite_kb_spark.operators.textops import fingerprint, tokens
 
 DEFAULT_NUM_PERM = 16
 DEFAULT_BANDS = 4
 
+
 # A materialization barrier for plans consumed on BOTH sides of a
 # self-join (without one, the upstream hash pipeline runs twice). The
-# shared abstraction lives in softcite_kb_spark.materialize (iterative
-# CC/Lloyd use the same one); re-exported here for compatibility. The
 # default — localCheckpoint — is the single-JVM choice; on a real
 # cluster pass materialize.ScratchTableMaterializer(store).
-from softcite_kb_spark.materialize import (  # noqa: F401,E402
-    Materializer, ScratchTableMaterializer)
-
-
 def _default_materializer(df: DataFrame) -> DataFrame:
     # lazy: the self-join consumers trigger exactly one computation; an
     # eager checkpoint would add a separate job before the join runs

@@ -1,11 +1,10 @@
-"""Tests for the search flatten (P6/S11 analog) and bibtex/HTML parsers
-(F14, S4/S6)."""
+"""Tests for the KB read path: search flatten (P6/S11 analog), facets,
+ranking and the api_queries traversals."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from softcite_kb_spark.functions import docparse as dp
 from softcite_kb_spark.kb import indexing as ix
 
 
@@ -59,131 +58,6 @@ def test_search(spark):
     assert ix.search(flat, "nonexistent").count() == 0
 
 
-BIB = """
-@article{xie2015,
-  title = {Dynamic Documents with {R} and knitr},
-  author = "Yihui Xie",
-  year = {2015},
-  journal = {Chapman Hall}
-}
-@inproceedings{foo2020, title={A Study}, author={A. B.}, year={2020},
-  booktitle={Proc. of Things}}
-"""
-
-
-def test_parse_bibtex(spark):
-    df = spark.createDataFrame(pd.DataFrame({"bib": [BIB, "", None]}))
-    rows = df.select(dp.parse_bibtex("bib").alias("e")).collect()
-    e = rows[0].e
-    assert len(e) == 2
-    assert e[0].entry_type == "article" and e[0].key == "xie2015"
-    assert "knitr" in e[0].title and e[0].year == "2015"
-    assert e[0].venue == "Chapman Hall"
-    assert e[1].entry_type == "inproceedings" and e[1].venue == "Proc. of Things"
-    assert rows[1].e == [] and rows[2].e == []
-    sig = df.limit(1).select(dp.bib_signature(F.lit(e[0].title)).alias("s")) \
-        .first().s
-    assert sig == "dynamicdocumentswithrandknitr"
-
-
-HTML = """
-<html><body><h2>knitr: A General-Purpose Tool</h2>
-<p>Dynamic report generation.</p>
-<table>
-<tr><td>Version:</td><td>1.43</td></tr>
-<tr><td>Maintainer:</td><td>Yihui Xie &lt;xie@example.org&gt;</td></tr>
-<tr><td>License:</td><td><a href="x">GPL</a></td></tr>
-</table>
-<blockquote>Xie Y (2015). <em>Dynamic Documents</em>.</blockquote>
-</body></html>
-"""
-
-
-def test_parse_package_page(spark):
-    df = spark.createDataFrame(pd.DataFrame({"html": [HTML, None]}))
-    rows = df.select(dp.parse_package_page("html").alias("p")).collect()
-    p = rows[0].p
-    assert p.title.startswith("knitr")
-    assert p.description == "Dynamic report generation."
-    assert p.attrs["Version"] == "1.43"
-    assert p.attrs["License"] == "GPL"
-    assert len(p.citations) == 1 and "Dynamic Documents" in p.citations[0]
-    assert rows[1].p.title is None
-
-
-_TEI_SAMPLE = """<biblStruct xml:id="b7">
-  <analytic>
-    <title level="a" type="main">Scikit-learn: Machine Learning in &amp;quot;Python&amp;quot;</title>
-    <author><persName><forename type="first">Fabian</forename>
-      <forename type="middle">G</forename>
-      <surname>Pedregosa</surname></persName></author>
-    <author><persName><forename type="first">Gael</forename>
-      <surname>Varoquaux</surname></persName></author>
-    <author><orgName>Inria</orgName></author>
-    <idno type="DOI">10.5555/1953048.2078195</idno>
-    <idno type="PMID">12345</idno>
-    <ptr type="open-access" target="https://example.org/oa.pdf" />
-  </analytic>
-  <monogr>
-    <title level="j">Journal of Machine Learning Research</title>
-    <idno type="ISSN">1532-4435</idno>
-    <imprint>
-      <publisher>JMLR.org</publisher>
-      <biblScope unit="volume">12</biblScope>
-      <biblScope unit="issue">10</biblScope>
-      <biblScope unit="page" from="2825" to="2830" />
-      <date type="published" when="2011-10-01" />
-    </imprint>
-  </monogr>
-</biblStruct>"""
-
-_TEI_PAGE_TEXT = """<biblStruct>
-  <analytic><title level="a">T</title></analytic>
-  <monogr>
-    <title level="m">Proc. of Things</title>
-    <meeting><title>NeurIPS</title><placeName>Vancouver</placeName></meeting>
-    <imprint>
-      <biblScope unit="page">11-22</biblScope>
-      <date type="published" when="2019" />
-    </imprint>
-  </monogr>
-</biblStruct>"""
-
-
-def test_tei_biblio_parse(spark):
-    """F15: TEI biblStruct xpath battery (tei2json,
-    populate_staging_area.py:615-751) as a regex-grammar pandas UDF."""
-    df = spark.createDataFrame(
-        pd.DataFrame({"tei": [_TEI_SAMPLE, _TEI_PAGE_TEXT, None, "<junk/>"]}))
-    rows = df.select(dp.parse_tei_biblio("tei").alias("b")).select("b.*").collect()
-    r = rows[0]
-    assert r.title == 'Scikit-learn: Machine Learning in &quot;Python&quot;' \
-        or r.title == 'Scikit-learn: Machine Learning in "Python"'
-    assert r.doi == "10.5555/1953048.2078195"
-    assert r.pmid == "12345"
-    assert r.oa_link == "https://example.org/oa.pdf"
-    assert [a.asDict() for a in r.authors] == [
-        {"given": "Fabian G", "family": "Pedregosa"},
-        {"given": "Gael", "family": "Varoquaux"},
-    ]
-    assert r.journal == "Journal of Machine Learning Research"
-    assert r.publisher == "JMLR.org"
-    assert r.volume == "12" and r.issue == "10"
-    assert r.page == "2825-2830"
-    assert r.issn == "1532-4435"
-    assert r.date == "2011-10-01" and r.year == "2011"
-
-    r2 = rows[1]
-    assert r2.monograph == "Proc. of Things"
-    assert r2.page == "11-22"  # text fallback when from/to absent
-    assert r2.event == "NeurIPS"
-    assert r2.year == "2019"
-
-    r3, r4 = rows[2], rows[3]
-    assert r3.title is None and r3.authors == []
-    assert r4.doi is None
-
-
 def test_facets(spark):
     """ES-facet analog: per-column top-k buckets, array columns facet per
     element (doc/example-api.md:33-60)."""
@@ -207,16 +81,25 @@ def test_facets_empty_cols_rejected(spark):
         ix.facets(flat, [])
 
 
-def test_tei_forename_unescaped(spark):
-    tei = ('<biblStruct><analytic><title level="a">T</title>'
-           '<author><persName><forename>Jos&#233;</forename>'
-           '<surname>N&#233;e</surname></persName></author>'
-           '</analytic></biblStruct>')
-    r = spark.createDataFrame(pd.DataFrame({"tei": [tei]})) \
-        .select(dp.parse_tei_biblio("tei").alias("b")).select("b.*") \
-        .collect()[0]
-    assert r.authors[0].given == "José"
-    assert r.authors[0].family == "Née"
+def test_api_queries_shapes(spark):
+    from softcite_kb_spark.queries import api_queries as aq
+    edges = spark.createDataFrame(pd.DataFrame({
+        "src_id": ["a", "a", "b", "c", "a"],
+        "dst_id": ["x", "x", "x", "y", "y"],
+        "rel": ["cites"] * 5,
+        "count": [1, 2, 1, 1, 1],
+    }))
+    top = aq.top_entities_by_count(edges, key="dst_id", n=1).collect()
+    assert top[0].entity == "x" and top[0].cnt == 3
+    grouped = aq.group_into_lists(edges, "src_id", "dst_id", n=10).collect()
+    byg = {r.grp: r for r in grouped}
+    assert byg["a"].n_items == 3 and byg["a"]["items"] == ["x", "x", "y"]
+    hop = aq.two_hop(
+        edges, spark.createDataFrame(pd.DataFrame({
+            "src_id": ["x"], "dst_id": ["z"], "rel": ["dep"]})))
+    rows = hop.collect()
+    assert all(r.via_id == "x" and r.end_id == "z" for r in rows)
+    assert {r.start_id for r in rows} == {"a", "b"}
 
 
 def test_two_hop_reverse_direction(spark):
