@@ -3038,5 +3038,5 @@ def oracle_sql() -> dict[str, str]:
 if __name__ == "__main__":
     from softcite_kb_spark.session import get_spark
 
-    s = get_spark(master="local[8]", shuffle_partitions=8)
+    s = get_spark()
     entry(s).show(20, truncate=False)

@@ -87,6 +87,8 @@ def _get_session(conf: dict | None = None):
     cluster manager provided one (spark-submit sets spark.master)."""
     from pyspark.sql import SparkSession
 
+    from softcite_kb_spark.session import ENGINE_SQL_DEFAULTS
+
     active = SparkSession.getActiveSession()
     if active is not None:
         return active
@@ -94,11 +96,7 @@ def _get_session(conf: dict | None = None):
     def build(extra: dict):
         builder = SparkSession.builder.appName("softcite_kb_spark")
         for k, v in {
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.adaptive.coalescePartitions.enabled": "true",
-            "spark.sql.adaptive.skewJoin.enabled": "true",
-            "spark.sql.session.timeZone": "UTC",
-            "spark.sql.execution.arrow.pyspark.enabled": "true",
+            **ENGINE_SQL_DEFAULTS,
             **(conf or {}),
             **extra,
         }.items():

@@ -684,7 +684,7 @@ def build_edges(triples: DataFrame, canon: DataFrame,
 
 def augment_nodes_with_authority(
     nodes: DataFrame, edges: DataFrame, authority_entities: DataFrame,
-    broadcast: bool | None = None,
+    broadcast: bool | None = None, node_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Add authority-entity vertices referenced by edges but absent from the
     mention-derived node table (languages/persons/licenses — the analog of
@@ -692,12 +692,20 @@ def augment_nodes_with_authority(
     existing ids keeps the operation idempotent. ``broadcast``
     size-gates the authority hint (None = probe; VERDICT r04 #1) —
     ungated, the equi-join on entity_id shuffles both sides, and the
-    ``referenced`` side is already distinct (unskewed)."""
+    ``referenced`` side is already distinct (unskewed).
+
+    ``node_ids`` is a frame holding ``nodes``' ``canonical_id`` set, for
+    callers with a cheaper source of it than ``nodes``' own plan (the
+    pipeline passes the materialized canonical map: :func:`build_nodes`
+    emits one row per distinct canonical id, so the anti-join does not
+    re-run its aggregate chain). Default: ``nodes`` itself."""
     from softcite_kb_spark.operators.linking import (
         _hint, authority_fits_broadcast)
 
     if broadcast is None:
         broadcast = authority_fits_broadcast(authority_entities)
+    ids = (nodes.select("canonical_id") if node_ids is None
+           else node_ids.select("canonical_id").distinct())
     referenced = (
         edges.filter(F.col("dst_id").startswith("e:"))
         .select(F.expr("substring(dst_id, 3)").alias("entity_id"))
@@ -715,6 +723,6 @@ def augment_nodes_with_authority(
             F.lit(0).cast("long").alias("n_surfaces"),
             F.col("entity_type"),
         )
-        .join(nodes.select("canonical_id"), "canonical_id", "left_anti")
+        .join(ids, "canonical_id", "left_anti")
     )
     return nodes.unionByName(extra, allowMissingColumns=True)

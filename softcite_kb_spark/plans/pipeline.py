@@ -672,7 +672,7 @@ class KGPipeline:
                 nodes = cz.augment_nodes_with_authority(
                     cz.build_nodes(canon, authority_entities=auth,
                                    broadcast=bc),
-                    edges, auth, broadcast=bc)
+                    edges, auth, broadcast=bc, node_ids=canon)
                 fe = pool.submit(self.store.write, edges, "edges")
                 self.store.write(nodes, "nodes")
                 fe.result()

@@ -13,6 +13,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: SQL defaults of every session the engine creates, shared by
+#: :func:`get_spark` and the spark-submit CLI (``cli._get_session``).
+#: Callers override any of them through their own conf.
+ENGINE_SQL_DEFAULTS: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Generated-class cache (static conf, default 100). Three builds,
+    # the KB feed and query path and one ingest_increment batch generate
+    # 338 distinct classes (CodegenMetrics compile count, no eviction;
+    # one build alone 231). An LRU smaller than one build evicts every
+    # class before it is reused and each build Janino-compiles its plan
+    # again; 2000 leaves >5x headroom for AQE plan variants.
+    "spark.sql.codegen.cache.maxEntries": "2000",
+}
+
 
 def get_spark(
     master: str | None = None,
@@ -40,12 +58,8 @@ def get_spark(
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
+        .config(map=ENGINE_SQL_DEFAULTS)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

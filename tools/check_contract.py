@@ -46,8 +46,7 @@ def frame_key(rows, cols):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(master="local[8]", shuffle_partitions=8,
-                      app_name="contract-check")
+    spark = get_spark(app_name="contract-check")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
