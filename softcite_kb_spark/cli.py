@@ -23,7 +23,7 @@ Config file (JSON)::
       //        "manifest_root": "/mnt/kb-manifests"}
       "pipeline": {"blacklist": [...], "min_vote_total": 2,
                    "partition_buckets": 128, "cc_algorithm": "star",
-                   "authority_broadcast": "auto", ...},
+                   ...},
       "load": {"transcripts": "/data/in/transcripts.parquet",
                "authority_entities": "...", "authority_ids": "..."}
     }

@@ -128,78 +128,6 @@ def mention_langs(triples: DataFrame) -> DataFrame:
     )
 
 
-def trigram_similarity(a: str = "norm_surface", b: str = "match_label"):
-    """Char-trigram Jaccard similarity as a scalar pandas UDF Column.
-
-    The scoring kernel of SURVEY.md 2.10: per candidate pair, Jaccard over
-    padded character 3-gram sets — the vectorized analog of the reference's
-    post-validation scoring (merge.py:268-297 + name-variant rules).
-    Arrow-batched; used to re-score candidates whose blocking method is
-    weaker than an exact label match.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def grams(s: str) -> set:
-        s = f"  {s} "
-        return {s[i:i + 3] for i in range(len(s) - 2)}
-
-    # no annotations: `from __future__ import annotations` stringifies
-    # hints and pandas_udf's inference can't resolve the local `pd` name;
-    # unannotated defaults to SCALAR which is what we want
-    @F.pandas_udf(T.DoubleType())
-    def sim(xs, ys):
-        out = []
-        for x, y in zip(xs, ys):
-            if not x or not y:
-                out.append(0.0)
-                continue
-            gx, gy = grams(x.lower()), grams(y.lower())
-            inter = len(gx & gy)
-            out.append(round(inter / (len(gx) + len(gy) - inter), 6))
-        return pd.Series(out)
-
-    return sim(F.col(a), F.col(b))
-
-
-def score_candidates_similarity(
-    candidates: DataFrame,
-    authority_entities: DataFrame,
-    broadcast: bool | None = None,
-) -> DataFrame:
-    """Blend the method-prior score with trigram similarity to the entity's
-    canonical label: score = 0.5*prior + 0.5*trigram, with two guards:
-
-      * strong-identifier candidates keep their prior untouched — the
-        authoritative pkg-id/DOI match must never lose a vote to a
-        textually-closer wrong entity (the fast path "wins ties" contract);
-      * the comparison label is NORM-NAME-normalized like the surface —
-        comparing against the raw label scored an exact hyphenated match
-        ('stat forge' vs 'Stat-Forge') well under 1.0, letting a space-form
-        competitor steal the surface.
-
-    ``broadcast``: size-gate for the label-dimension hint (None =
-    probe via :func:`authority_fits_broadcast`).
-    """
-    if broadcast is None:
-        broadcast = authority_fits_broadcast(authority_entities)
-    labels = _hint(
-        authority_entities.select(
-            "entity_id", norm_name(F.col("label")).alias("match_label")),
-        broadcast)
-    blended = F.round(
-        0.5 * F.col("score")
-        + 0.5 * trigram_similarity("norm_surface", "match_label"), 6)
-    return (
-        candidates.join(labels, "entity_id", "left")
-        .withColumn(
-            "score",
-            F.when(F.col("method") == METHOD_STRONG_ID, F.col("score"))
-            .otherwise(blended))
-        .drop("match_label")
-    )
-
-
 def generate_candidates(
     folded_mentions: DataFrame,
     authority_entities: DataFrame,
@@ -326,16 +254,12 @@ def vote_links(
 
 
 def surface_stats(folded_mentions: DataFrame) -> DataFrame:
-    """(norm_surface, total n_mentions, group count) — the only
+    """(norm_surface, total n_mentions) — the only
     conversation-dependent input the voting decision needs (see
     :func:`vote_links_surface`). One map-side-combined groupBy whose
-    key space is DISTINCT SURFACES, not mention groups. ``n_groups``
-    (rows per surface in folded_mentions) doubles as the hot-key
-    statistic for the final accepted-map join — computed here so the
-    skew policy costs zero extra passes over the mention table."""
+    key space is DISTINCT SURFACES, not mention groups."""
     return folded_mentions.groupBy("norm_surface").agg(
-        F.sum("n_mentions").alias("surface_mentions"),
-        F.count("*").cast("long").alias("n_groups"))
+        F.sum("n_mentions").alias("surface_mentions"))
 
 
 def generate_surface_candidates(
@@ -459,7 +383,6 @@ def link_mentions(
     triples: DataFrame | None = None,
     min_total: int = 2,
     broadcast: bool | None = None,
-    hot_surface_threshold: int = 0,
 ) -> DataFrame:
     """Full stage-2: surface-level candidates -> voting -> per-group links.
 
@@ -468,25 +391,16 @@ def link_mentions(
 
     The decision runs at surface granularity (:func:`vote_links_surface`
     — provably identical to the group-level :func:`vote_links` path,
-    which remains as the reference implementation and the
-    similarity-scoring building block): the 10^12-row mention table is
-    touched exactly twice, once by the map-side-combined surface stats
-    and once by the final accepted-map join.
+    which remains as the reference implementation): the 10^12-row
+    mention table is touched exactly twice, once by the
+    map-side-combined surface stats and once by the final accepted-map
+    join. A hot surface (the "R" problem, merge.py:186-189) is one row
+    of the stats and of the accepted map; AQE's skew-join (on in
+    ``session.ENGINE_SQL_DEFAULTS``) splits it in the final join when
+    that join shuffles.
 
     ``broadcast`` size-gates every authority-side hint (None = one
     :func:`authority_fits_broadcast` probe shared by all of them).
-
-    ``hot_surface_threshold`` > 0 turns on the skew POLICY for the
-    final accepted-map join when that map is too big to broadcast: a
-    surface with more than this many mention groups (the "R" problem,
-    merge.py:186-189) joins through a broadcast of the hot slice of
-    the accepted map while the cold tail takes the plain shuffle join
-    (:func:`softcite_kb_spark.functions.skew.hot_key_split_join`
-    shape). The hot-key statistic is ``n_groups``, already computed by
-    the surface-stats pass — the DECISION costs zero extra scans; the
-    split plan itself reads the mention table through a hot/cold
-    semi/anti pair, trading one extra broadcast-filtered scan for
-    keeping the hot surface out of the shuffle entirely.
     """
     if broadcast is None:
         broadcast = authority_fits_broadcast(authority_entities,
@@ -501,20 +415,6 @@ def link_mentions(
         F.col("method").alias("link_method"),
         F.col("score").alias("link_score"),
     )
-    if hot_surface_threshold > 0:
-        # split plan from the precomputed per-surface group counts: the
-        # hot slice of the accepted map is bounded by the number of hot
-        # surfaces (tiny) and broadcasts; the cold tail shuffles
-        hot = F.broadcast(
-            stats.filter(F.col("n_groups") > hot_surface_threshold)
-            .select("norm_surface"))
-        f_hot = folded_mentions.join(hot, "norm_surface", "left_semi")
-        f_cold = folded_mentions.join(hot, "norm_surface", "left_anti")
-        acc_hot = accepted.join(hot, "norm_surface", "left_semi")
-        return (
-            f_hot.join(F.broadcast(acc_hot), "norm_surface", "left")
-            .unionByName(f_cold.join(accepted, "norm_surface", "left"))
-        )
     # surface->entity map size is bounded by distinct surfaces, typically
     # broadcastable, but can reach GBs at web scale — let AQE decide.
     return folded_mentions.join(accepted, "norm_surface", "left")

@@ -242,13 +242,9 @@ class IncrementalKGPipeline(KGPipeline):
         auth = self.store.read(self.spark, "authority_entities")
         ids = (self.store.read(self.spark, "authority_ids")
                if self.store.exists("authority_ids") else None)
-        bc = self._broadcast_decision(auth, ids)
         cands = lk.generate_surface_candidates(
             stats.select("norm_surface", "surface_mentions"), auth, ids,
-            triples=triples, broadcast=bc)
-        if self.config.similarity_scoring:
-            cands = lk.score_candidates_similarity(cands, auth,
-                                                   broadcast=bc)
+            triples=triples, broadcast=self._authority_fits())
         return lk.vote_links_surface(
             cands, min_total=self.config.min_vote_total).select(
             "norm_surface", "entity_id",
@@ -447,10 +443,6 @@ class IncrementalKGPipeline(KGPipeline):
     def _apply_increment(self, new_transcripts: DataFrame) -> dict:
         t0 = time.time()
         self.last_read_buckets = {}
-        # float the authority broadcast probe over the batch-signature /
-        # old-slice / stage-1 work (same overlap run() applies): the
-        # stage-2 decision joins the future via the per-snapshot cache
-        self._prewarm_broadcast_decision()
         mat = self._mat()
         spark = self.spark
         batch_keys = mat(new_transcripts.select("conv_id").distinct())
@@ -635,7 +627,7 @@ class IncrementalKGPipeline(KGPipeline):
 
         # ---- statements / nodes / edges slices via batch operators ----
         auth = self.store.read(spark, "authority_entities")
-        bc = self._broadcast_decision(auth)
+        bc = self._authority_fits()
         k_del = self._with_sbucket(K_all, col="canonical_id",
                                    shuffle=False)
 

@@ -44,26 +44,12 @@ class PipelineConfig:
     # graphs) or "star" (large-star/small-star, O(log n) on any topology)
     cc_algorithm: str = "label-propagation"
     source_name: str = "transcripts"
-    similarity_scoring: bool = False
     # >0 enables incremental ingest at scale: stage-1 outputs carry a
     # conv-hash bucket column and are PARTITIONED by it, so
     # ingest_increment's per-conversation MERGE rewrites only the
     # touched buckets (storage.TableStore pruned merge) instead of the
     # whole table. 0 = unbucketed (full-rewrite merges, still correct).
     partition_buckets: int = 0
-    # Broadcast policy for every authority-dimension join in stage 2/3
-    # (VERDICT r04 #1): "auto" probes the exploded blocking-key row
-    # count once per stage (linking.authority_fits_broadcast) and falls
-    # back to plain shuffle joins for a Wikidata-scale authority;
-    # "always"/"never" skip the probe. EXECUTION detail — cannot change
-    # stage outputs, so deliberately NOT part of the config fingerprint
-    # (like `materializer`): re-tuning it must not invalidate resume.
-    authority_broadcast: str = "auto"
-    # >0 turns on the hot-surface split plan for stage-2's final
-    # accepted-map join (see linking.link_mentions): surfaces with more
-    # than this many mention groups join through a broadcast hot slice.
-    # Execution detail, also outside the fingerprint.
-    hot_surface_threshold: int = 0
     extra: dict = field(default_factory=dict)
 
     def fingerprint(self) -> str:
@@ -73,7 +59,6 @@ class PipelineConfig:
              "cc_max_iter": self.cc_max_iter,
              "cc_algorithm": self.cc_algorithm,
              "source_name": self.source_name,
-             "similarity_scoring": self.similarity_scoring,
              "partition_buckets": self.partition_buckets,
              "extra": self.extra},
             sort_keys=True)
@@ -108,12 +93,6 @@ class KGPipeline:
         # fingerprint — it cannot change stage outputs.
         self.materializer = materializer
         self._manifest_path = os.path.join(store.root, "_manifest.json")
-        # broadcast-gate probe cache: {authority snapshot-id key: bool}
-        # (one O(authority) count per snapshot, not per stage); probes
-        # in flight on a background thread live in _bc_probe_futures
-        # until a consumer joins them (see _prewarm_broadcast_decision)
-        self._bc_probe_cache: dict[tuple, bool] = {}
-        self._bc_probe_futures: dict = {}
 
     # -- manifest ---------------------------------------------------------
     def _load_manifest(self) -> dict:
@@ -284,10 +263,6 @@ class KGPipeline:
         Returns the stage report of the follow-up run
         (extract: "skipped").
         """
-        # float the stage-2/3 broadcast probe over the batch's stage-1
-        # extraction (same overlap run() applies to a full build; the
-        # increment always re-runs link, so the probe is never wasted)
-        self._prewarm_broadcast_decision()
         self.ingest_stage1(new_transcripts)
         return self.run(resume=True)
 
@@ -534,68 +509,28 @@ class KGPipeline:
             self._save_manifest(m)
         return snap
 
-    def _bc_key(self) -> tuple:
-        return tuple(
-            (t, snap.snapshot_id if snap else -1)
-            for t in ("authority_entities", "authority_ids")
-            for snap in [self.store.current_snapshot(t)
-                         if self.store.exists(t) else None])
-
-    def _broadcast_decision(self, auth, ids=None) -> bool:
-        """One probe per AUTHORITY SNAPSHOT under "auto" (VERDICT r05 #5):
-        the decision is cached keyed by the authority tables' current
-        snapshot ids, so a 3-stage run pays one count job instead of
-        three O(authority) probes; the concrete bool is then passed to
-        every join helper — no repeated counts. The cache invalidates
-        itself when either authority table advances (new snapshot id).
-        A probe prewarmed onto a background thread (run() kicks one off
-        before stage 1, whose jobs it overlaps) is joined here, still
-        exactly one count per snapshot."""
-        mode = self.config.authority_broadcast
-        if mode == "always":
-            return True
-        if mode == "never":
-            return False
-        key = self._bc_key()
-        cached = self._bc_probe_cache.get(key)
-        if cached is None:
-            fut = self._bc_probe_futures.pop(key, None)
-            cached = (fut.result() if fut is not None
-                      else lk.authority_fits_broadcast(auth, ids))
-            self._bc_probe_cache[key] = cached
-        return cached
-
-    def _prewarm_broadcast_decision(self) -> None:
-        """Launch the "auto" broadcast probe on a background thread so
-        its count job overlaps stage-1 extraction (guide §2.6 concurrent
-        jobs): the probe reads only the authority tables, which stage 1
-        neither reads nor writes, so the overlapped result is the bool
-        the synchronous probe would have produced. No-op unless the mode
-        is auto, the authority exists, and the snapshot's decision is
-        neither cached nor already in flight."""
-        if self.config.authority_broadcast != "auto":
-            return
-        if not self.store.exists("authority_entities"):
-            return
-        key = self._bc_key()
-        if key in self._bc_probe_cache or key in self._bc_probe_futures:
-            return
-        # drop any stale in-flight probe for a DIFFERENT snapshot (the
-        # authority advanced before the old probe was consumed): the
-        # abandoned count is read-only and its worker thread exits on
-        # completion — but the reference must not accumulate forever in
-        # a long-lived ingest process
-        for stale in [k for k in self._bc_probe_futures if k != key]:
-            self._bc_probe_futures.pop(stale, None)
-        auth = self.store.read(self.spark, "authority_entities")
-        ids = (self.store.read(self.spark, "authority_ids")
-               if self.store.exists("authority_ids") else None)
-        from concurrent.futures import ThreadPoolExecutor
-
-        ex_ = ThreadPoolExecutor(max_workers=1)
-        self._bc_probe_futures[key] = ex_.submit(
-            lk.authority_fits_broadcast, auth, ids)
-        ex_.shutdown(wait=False)
+    def _authority_fits(self) -> bool:
+        """The stage-2/3 broadcast size gate, decided from the recorded
+        row counts of the current ``authority_entities`` and
+        ``authority_ids`` snapshots: metadata only, no Spark job, and
+        the same bool for stage 2, stage 3 and the incremental path in
+        whatever order they run. A new authority snapshot is read on the
+        next call. The count is one row per entity and per strong id;
+        ``linking.authority_fits_broadcast`` (the reference this is
+        pinned to on every fixture) counts exploded label + alias keys,
+        so the two readings differ by the alias fan-out. An unrecorded
+        count (-1) decides "no hint": the joins then shuffle unless AQE
+        broadcasts a side it measured small."""
+        rows = 0
+        for t in ("authority_entities", "authority_ids"):
+            snap = (self.store.current_snapshot(t)
+                    if self.store.exists(t) else None)
+            if snap is None:
+                continue
+            if snap.row_count < 0:
+                return False
+            rows += snap.row_count
+        return rows <= lk.AUTHORITY_BROADCAST_MAX_ROWS
 
     def stage_link(self) -> None:
         # bucket is a storage-layout column (incremental merge pruning)
@@ -605,35 +540,17 @@ class KGPipeline:
         ids = (self.store.read(self.spark, "authority_ids")
                if self.store.exists("authority_ids") else None)
         triples = self.store.read(self.spark, "triples").drop("bucket")
-        bc = self._broadcast_decision(auth, ids)
-        if self.config.similarity_scoring:
-            # surface-granularity decision (see vote_links_surface): the
-            # trigram rescoring is surface-pure like the method prior,
-            # so it blends per (surface, entity) row, not per group
-            stats = lk.surface_stats(folded)
-            cands = lk.generate_surface_candidates(stats, auth, ids,
-                                                   triples, broadcast=bc)
-            cands = lk.score_candidates_similarity(cands, auth,
-                                                   broadcast=bc)
-            accepted = lk.vote_links_surface(
-                cands, min_total=self.config.min_vote_total).select(
-                "norm_surface", "entity_id",
-                F.col("method").alias("link_method"),
-                F.col("score").alias("link_score"))
-            linked = folded.join(accepted, "norm_surface", "left")
-        else:
-            linked = lk.link_mentions(
-                folded, auth, ids, triples,
-                min_total=self.config.min_vote_total,
-                broadcast=bc,
-                hot_surface_threshold=self.config.hot_surface_threshold)
+        linked = lk.link_mentions(
+            folded, auth, ids, triples,
+            min_total=self.config.min_vote_total,
+            broadcast=self._authority_fits())
         self.store.write(linked, "linked_mentions")
 
     def stage_canonicalize(self) -> None:
         linked = self.store.read(self.spark, "linked_mentions")
         triples = self.store.read(self.spark, "triples").drop("bucket")
         auth = self.store.read(self.spark, "authority_entities")
-        bc = self._broadcast_decision(auth)
+        bc = self._authority_fits()
         # below cz.CC_LOCAL_EDGE_LIMIT surface rows (and with no
         # materializer) canonical_map builds the surface map on the driver
         # and broadcasts it; above it CC runs distributed. One
@@ -708,12 +625,6 @@ class KGPipeline:
             if resume and self._stage_fresh(stage, inputs):
                 report[stage] = "skipped"
             else:
-                if stage == "extract":
-                    # stage 1 never touches the authority tables —
-                    # float the stage-2/3 broadcast probe over it
-                    # (one fewer sequential count-job wave;
-                    # stage_link joins it)
-                    self._prewarm_broadcast_decision()
                 t0 = time.time()
                 fns[stage]()
                 self._record_stage(stage, inputs, time.time() - t0)

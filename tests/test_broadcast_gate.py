@@ -1,8 +1,8 @@
-"""Authority-broadcast size gate (VERDICT r04 #1) + hot-surface skew
-policy (VERDICT r04 #7): the stage-2/3 joins must not hint
-``F.broadcast`` unconditionally — a Wikidata-scale authority would OOM
-— and the gated shuffle fallback must produce the IDENTICAL accepted
-set. The hot-surface split plan must match the plain join's result."""
+"""Authority-broadcast size gate (VERDICT r04 #1): the stage-2/3 joins
+must not hint ``F.broadcast`` unconditionally — a Wikidata-scale
+authority would OOM — and the gated shuffle fallback must produce the
+IDENTICAL accepted set. The pipeline decides the gate once from the
+authority snapshots' recorded row counts, with no probe job."""
 
 import pandas as pd
 import pytest
@@ -112,68 +112,31 @@ def test_canonicalize_gated_broadcast_identical(spark, linked_inputs):
             _multiset_equal(ref_aug, aug)
 
 
-def test_hot_surface_split_join_matches_plain(spark, corpus):
-    """Planted 40%-hot corpus (one surface owns 40% of all mention
-    groups — the reference's known-slow "R" merge, merge.py:186-189):
-    the split plan chosen by hot_surface_threshold must produce the
-    IDENTICAL linked table, and its plan must actually split (union of
-    a broadcast-hot leg and a shuffle-cold leg)."""
-    lbl = (corpus["authority_entities"]
-           .filter(F.col("entity_type") == "software")
-           .select("label").orderBy("label").first().label)
-    hot_surface = lbl.lower().replace("-", " ")  # norm_name in Python
-    hot = [(f"h{i}", hot_surface, [lbl], 2, [], 0) for i in range(400)]
-    cold = [(f"c{i}", f"tool{i % 200}", [f"tool{i % 200}"], 1, [], 0)
-            for i in range(600)]
-    folded = spark.createDataFrame(
-        hot + cold,
-        schema="conv_id string, norm_surface string, "
-               "surfaces array<string>, n_mentions long, "
-               "versions array<string>, first_turn_idx int")
-    auth, ids = corpus["authority_entities"], corpus["authority_ids"]
-    plain = lk.link_mentions(folded, auth, ids, None, min_total=1,
-                             hot_surface_threshold=0)
-    split = lk.link_mentions(folded, auth, ids, None, min_total=1,
-                             hot_surface_threshold=100)
-    _multiset_equal(plain, split)
-    # the hot surface is actually linked (equality is not vacuous) and
-    # the split plan really unions two legs
-    assert plain.filter((F.col("norm_surface") == hot_surface)
-                        & F.col("entity_id").isNotNull()).count() == 400
-    phys = split._jdf.queryExecution().executedPlan().toString()
-    assert "Union" in phys
+def _authority_store(spark, root, auth, ids):
+    st = TableStore(root)
+    st.write(auth, "authority_entities")
+    st.write(ids, "authority_ids")
+    return st
 
 
-def test_pipeline_authority_broadcast_never_matches_always(
-        spark, tmp_path):
-    """End-to-end: a pipeline run with authority_broadcast="never"
-    (the Wikidata-scale configuration) emits the same KB as
-    "always" — the policy is an execution knob, never a semantics
-    knob."""
-    tables = datagen.build_corpus(n_conversations=30)
-    outs = {}
-    for mode in ("always", "never"):
-        st = TableStore(str(tmp_path / mode))
-        cfg = PipelineConfig(blacklist=tuple(datagen.BLACKLIST),
-                             min_vote_total=1, authority_broadcast=mode)
-        pipe = KGPipeline(spark, st, cfg)
-        st.write(spark.createDataFrame(tables["transcripts"]),
-                 "transcripts")
-        for n in ("authority_entities", "authority_ids"):
-            st.write(spark.createDataFrame(tables[n]), n)
-        pipe.run(resume=False)
-        outs[mode] = st
-    for t in ("linked_mentions", "statements", "nodes", "edges"):
-        _multiset_equal(outs["always"].read(spark, t),
-                        outs["never"].read(spark, t))
+def _recorded_rows(st):
+    return sum(st.current_snapshot(t).row_count
+               for t in ("authority_entities", "authority_ids"))
 
 
-def test_broadcast_probe_cached_per_authority_snapshot(
-        spark, tmp_path, monkeypatch):
-    """Under authority_broadcast="auto" a 3-stage run pays exactly ONE
-    O(authority) probe (VERDICT r05 #5): the decision is cached keyed by
-    the authority snapshot ids, and invalidates when the authority
-    advances."""
+def _fixture_authorities(spark, corpus):
+    """The conftest corpus's authority and a differently seeded and
+    sized datagen one."""
+    auth, ids = datagen.build_authority(n_software=200, seed=3)
+    return [
+        (corpus["authority_entities"], corpus["authority_ids"]),
+        (spark.createDataFrame(auth), spark.createDataFrame(ids)),
+    ]
+
+
+def test_run_and_ingest_make_no_probe(spark, tmp_path, monkeypatch):
+    """A full run() and an ingest_increment decide the gate from
+    snapshot metadata: the count-job probe never runs."""
     calls = {"n": 0}
     real = lk.authority_fits_broadcast
 
@@ -183,17 +146,107 @@ def test_broadcast_probe_cached_per_authority_snapshot(
 
     monkeypatch.setattr(lk, "authority_fits_broadcast", counting)
     tables = datagen.build_corpus(n_conversations=20)
+    t = tables["transcripts"]
+    first = t.conv_id.isin(sorted(t.conv_id.unique())[:15])
     st = TableStore(str(tmp_path / "kb"))
-    cfg = PipelineConfig(blacklist=tuple(datagen.BLACKLIST),
-                         min_vote_total=1, authority_broadcast="auto")
-    pipe = KGPipeline(spark, st, cfg)
-    st.write(spark.createDataFrame(tables["transcripts"]), "transcripts")
     for n in ("authority_entities", "authority_ids"):
         st.write(spark.createDataFrame(tables[n]), n)
-    pipe.run(resume=False)
-    assert calls["n"] == 1
-    # a NEW authority snapshot must re-probe (cache keyed by snapshot id)
-    st.write(spark.createDataFrame(tables["authority_entities"]),
-             "authority_entities")
-    pipe._broadcast_decision(st.read(spark, "authority_entities"))
-    assert calls["n"] == 2
+    st.write(spark.createDataFrame(t[first]), "transcripts")
+    pipe = KGPipeline(spark, st, PipelineConfig(
+        blacklist=tuple(datagen.BLACKLIST), min_vote_total=1))
+    assert pipe.run(resume=False)["link"] == "ran"
+    report = pipe.ingest_increment(spark.createDataFrame(t[~first]))
+    assert report == {"extract": "skipped", "link": "ran",
+                      "canonicalize": "ran"}
+    assert calls["n"] == 0
+    # non-vacuous: the gated stages linked something
+    assert st.read(spark, "linked_mentions").filter(
+        F.col("entity_id").isNotNull()).count() > 0
+
+
+def test_decision_equals_probe_on_fixtures(spark, corpus, tmp_path):
+    """On every fixture authority the snapshot-stats decision equals
+    the exploded-key probe at the production threshold."""
+    for i, (auth, ids) in enumerate(_fixture_authorities(spark, corpus)):
+        st = _authority_store(spark, str(tmp_path / str(i)), auth, ids)
+        got = KGPipeline(spark, st)._authority_fits()
+        assert got == lk.authority_fits_broadcast(auth, ids)
+        assert got
+
+
+def test_decision_flips_over_threshold(spark, corpus, tmp_path,
+                                       monkeypatch):
+    """An authority over the threshold decides "no hint", like the
+    probe does; at the threshold it fits. The recorded rows (one per
+    entity and id) never exceed the probe's exploded-key count."""
+    for i, (auth, ids) in enumerate(_fixture_authorities(spark, corpus)):
+        st = _authority_store(spark, str(tmp_path / str(i)), auth, ids)
+        pipe = KGPipeline(spark, st)
+        rows = _recorded_rows(st)
+        keys = lk.authority_block_keys(auth).count() + ids.count()
+        assert 0 < rows <= keys
+        monkeypatch.setattr(lk, "AUTHORITY_BROADCAST_MAX_ROWS", rows - 1)
+        assert not pipe._authority_fits()
+        assert not lk.authority_fits_broadcast(auth, ids, max_rows=rows - 1)
+        monkeypatch.setattr(lk, "AUTHORITY_BROADCAST_MAX_ROWS", rows)
+        assert pipe._authority_fits()
+
+
+def test_new_authority_snapshot_is_reread(spark, corpus, tmp_path,
+                                          monkeypatch):
+    """The decision follows the current authority snapshot: committing a
+    smaller one flips an over-threshold authority to fitting, on the
+    same pipeline object."""
+    auth, ids = corpus["authority_entities"], corpus["authority_ids"]
+    st = _authority_store(spark, str(tmp_path / "kb"), auth, ids)
+    pipe = KGPipeline(spark, st)
+    monkeypatch.setattr(lk, "AUTHORITY_BROADCAST_MAX_ROWS",
+                        _recorded_rows(st) - 1)
+    assert not pipe._authority_fits()
+    st.write(auth.orderBy("entity_id").limit(10), "authority_entities")
+    assert pipe._authority_fits()
+
+
+def test_stage2_stage3_same_decision_in_either_order(
+        spark, tmp_path, monkeypatch):
+    """Stage 2 (authority_entities + authority_ids) and stage 3 get the
+    same decision whichever runs first in a fresh process — e.g. a
+    resume that skips stage 2. Thresholds sit between the entity-only
+    and the entity + id counts: the recorded rows, and the probe's
+    exploded keys."""
+    tables = datagen.build_corpus(n_conversations=20)
+    st = TableStore(str(tmp_path / "kb"))
+    for n in ("transcripts", "authority_entities", "authority_ids"):
+        st.write(spark.createDataFrame(tables[n]), n)
+    cfg = PipelineConfig(blacklist=tuple(datagen.BLACKLIST),
+                         min_vote_total=1)
+    KGPipeline(spark, st, cfg).run(resume=False)
+
+    seen = []
+    real_link, real_nodes = lk.link_mentions, cz.build_nodes
+
+    def link_spy(*a, **k):
+        seen.append(("link", k["broadcast"]))
+        return real_link(*a, **k)
+
+    def nodes_spy(*a, **k):
+        seen.append(("canonicalize", k["broadcast"]))
+        return real_nodes(*a, **k)
+
+    monkeypatch.setattr(lk, "link_mentions", link_spy)
+    monkeypatch.setattr(cz, "build_nodes", nodes_spy)
+    auth = st.read(spark, "authority_entities")
+    rows = _recorded_rows(st)
+    n_auth = st.current_snapshot("authority_entities").row_count
+    n_keys = lk.authority_block_keys(auth).count()
+    assert n_auth < rows
+    for threshold in (n_auth, n_keys):
+        monkeypatch.setattr(lk, "AUTHORITY_BROADCAST_MAX_ROWS", threshold)
+        fits = rows <= threshold
+        for order in (("stage_link", "stage_canonicalize"),
+                      ("stage_canonicalize", "stage_link")):
+            seen.clear()
+            pipe = KGPipeline(spark, st, cfg)
+            for stage in order:
+                getattr(pipe, stage)()
+            assert sorted(seen) == [("canonicalize", fits), ("link", fits)]

@@ -129,8 +129,7 @@ def test_language_post_validation(spark):
     assert got == {"QA"}
 
 
-def _linked_pergroup_reference(spark, corpus, min_total=1,
-                               similarity=False):
+def _linked_pergroup_reference(spark, corpus, min_total=1):
     """The GROUP-granularity stage-2 path (generate_candidates +
     vote_links + join) — kept as the reference implementation that the
     surface-granularity production path must match exactly."""
@@ -140,9 +139,6 @@ def _linked_pergroup_reference(spark, corpus, min_total=1,
     cands = lk.generate_candidates(
         folded, corpus["authority_entities"], corpus["authority_ids"],
         triples)
-    if similarity:
-        cands = lk.score_candidates_similarity(
-            cands, corpus["authority_entities"])
     accepted = lk.vote_links(cands, min_total=min_total).select(
         "norm_surface", "entity_id",
         F.col("method").alias("link_method"),
@@ -166,32 +162,6 @@ def test_surface_voting_equals_group_voting(spark, corpus):
         # non-vacuous: some links accepted, some mentions unlinked
         assert got.filter(F.col("entity_id").isNotNull()).count() > 0
         assert got.filter(F.col("entity_id").isNull()).count() > 0
-
-
-def test_surface_voting_equals_group_voting_similarity_path(
-        spark, corpus):
-    """Same equality for the similarity-rescored branch: the trigram
-    blend is surface-pure, so rescoring at surface granularity must not
-    change any accepted link."""
-    ref, folded, _ = _linked_pergroup_reference(
-        spark, corpus, min_total=1, similarity=True)
-    stats = lk.surface_stats(folded)
-    bl = spark.createDataFrame(pd.DataFrame({"term": datagen.BLACKLIST}))
-    triples = ex.extract_triples(corpus["transcripts"], bl)
-    cands = lk.generate_surface_candidates(
-        stats, corpus["authority_entities"], corpus["authority_ids"],
-        triples)
-    cands = lk.score_candidates_similarity(
-        cands, corpus["authority_entities"])
-    accepted = lk.vote_links_surface(cands, min_total=1).select(
-        "norm_surface", "entity_id",
-        F.col("method").alias("link_method"),
-        F.col("score").alias("link_score"))
-    got = folded.join(accepted, "norm_surface", "left")
-    cols = sorted(ref.columns)
-    assert got.count() == ref.count()
-    assert got.select(*cols).exceptAll(ref.select(*cols)).isEmpty()
-    assert ref.select(*cols).exceptAll(got.select(*cols)).isEmpty()
 
 
 def test_link_mentions_plan_shape(spark, corpus, tmp_path):
