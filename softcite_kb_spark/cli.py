@@ -22,8 +22,7 @@ Config file (JSON)::
       //  or   {"kind": "iceberg", "catalog": "prod", "namespace": "kb",
       //        "manifest_root": "/mnt/kb-manifests"}
       "pipeline": {"blacklist": [...], "min_vote_total": 2,
-                   "partition_buckets": 128, "cc_algorithm": "star",
-                   ...},
+                   "partition_buckets": 128, ...},
       "load": {"transcripts": "/data/in/transcripts.parquet",
                "authority_entities": "...", "authority_ids": "..."}
     }

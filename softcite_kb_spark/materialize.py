@@ -17,8 +17,8 @@ injectable ``materializer``; pass :class:`ScratchTableMaterializer` (or a
 reliable-checkpoint / Iceberg-scratch-table equivalent) for cluster jobs:
 
     store = TableStore("/scratch/jobs/cc-2024-01-01")
-    cc = connected_components_star(edges,
-                                   materializer=ScratchTableMaterializer(store))
+    cc = connected_components(edges,
+                              materializer=ScratchTableMaterializer(store))
 
 Reference analog: softcite_kb materializes every stage into ArangoDB
 collections (Readme.md:55-145) — durable by construction; this module is

@@ -25,9 +25,10 @@ nodes). Below ``CC_LOCAL_EDGE_LIMIT`` per-surface rows the surface ->
 canonical map is built on the driver from one bounded collect and
 returned as an Arrow ``LocalRelation``; the join back broadcasts it with
 no Spark job. Above the gate, or with an explicit ``materializer``, the
-distributed path runs: label propagation shuffles once per iteration on
-the edge table; iterations = graph diameter (match graphs are
-near-star-shaped, so 3-5). Each round ends at a materialization barrier
+one distributed rule runs: min-label propagation, which shuffles once
+per iteration on the edge table; iterations = graph diameter (stage 2
+accepts at most one entity per surface, so the graph is a forest of
+stars and closes in 2). Each round ends at a materialization barrier
 so plans don't grow exponentially — the barrier is INJECTABLE
 (``materializer`` param, see softcite_kb_spark.materialize):
 localCheckpoint by default (single JVM), a scratch-table persist on a
@@ -89,7 +90,7 @@ def _union_find(pairs) -> dict:
 def _cc_local(e: DataFrame, limit: int) -> DataFrame | None:
     """Driver-side union-find over a SMALL normalized edge set.
 
-    The distributed CC rules cost several shuffle rounds regardless of
+    The distributed rounds cost several shuffles regardless of
     input size (measured ~3.6 s on a 5k-edge match graph, all fixed
     overhead); below ``limit`` edges the exact same labeling — every
     edge-endpoint vertex mapped to the MIN member id of its component —
@@ -125,9 +126,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    checkpoint_every: int = 1,
     materializer: Materializer | None = None,
-    local_threshold: int = CC_LOCAL_EDGE_LIMIT,
 ) -> DataFrame:
     """Min-label propagation CC on an undirected edge DataFrame.
 
@@ -136,9 +135,11 @@ def connected_components(
 
     Each iteration: every vertex adopts min(own label, neighbors' labels).
     Converges in O(diameter) rounds; each round is one shuffle on edges +
-    one on labels. Match graphs from blocking are near-stars so this
-    converges in a few rounds; a long-chain adversary is bounded by
-    ``max_iter`` (raise for pathological graphs).
+    one on labels. Stage 2 accepts at most one entity per surface, so the
+    surface-entity graph stage 3 passes in is a forest of stars (diameter
+    <= 2) and closes in two rounds; a longer chain is bounded by
+    ``max_iter``, and exhausting it raises rather than returning a
+    fragmented labeling.
 
     ``materializer``: the per-round lineage barrier — localCheckpoint by
     default; pass ``ScratchTableMaterializer(store)`` on a cluster for a
@@ -154,7 +155,7 @@ def connected_components(
     # fast path only under the DEFAULT barrier: an explicitly injected
     # materializer (scratch tables on a cluster) is the caller opting
     # into the durable distributed rounds — honor it
-    local = _cc_local(e, local_threshold) if materializer is None else None
+    local = _cc_local(e, CC_LOCAL_EDGE_LIMIT) if materializer is None else None
     if local is not None:
         return local
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -167,7 +168,7 @@ def connected_components(
     )
 
     converged = False
-    for i in range(max_iter):
+    for _ in range(max_iter):
         nbr = (
             sym.join(labels, sym.a == labels.member_id, "inner")
             .groupBy(F.col("b").alias("member_id"))
@@ -182,10 +183,9 @@ def connected_components(
                 (F.col("nbr_min") < F.col("component_id")).alias("changed"),
             )
         )
-        if checkpoint_every and (i % checkpoint_every == checkpoint_every - 1):
-            # the barrier is the round's materialization (cuts lineage);
-            # the probe below then reads materialized output only
-            new_labels = mat(new_labels)
+        # the barrier is the round's materialization (cuts lineage);
+        # the probe below then reads materialized output only
+        new_labels = mat(new_labels)
         # convergence probe: take(1) short-circuits at the first changed row
         # instead of scanning everything for a full count
         converged = len(new_labels.filter(F.col("changed")).take(1)) == 0
@@ -194,132 +194,12 @@ def connected_components(
             break
     if not converged:
         # a partially-propagated labeling splits one true component across
-        # several ids — silent wrong winners. Refuse, like the star rule.
+        # several ids — silent wrong winners. Refuse.
         raise RuntimeError(
             f"connected_components did not converge within max_iter="
             f"{max_iter} (graph diameter exceeds the budget); raise "
-            f"max_iter or use algorithm='star' (O(log n) rounds)")
+            f"max_iter")
     return labels
-
-
-def _star_round(cur: DataFrame) -> DataFrame:
-    """One large-star + small-star round (Kiveris et al., 'Connected
-    Components in MapReduce and Beyond'). Node ids compare with the
-    DataFrame-native ordering (strings: lexicographic) — consistent with
-    the min-label rule used everywhere else."""
-    # large-star: every neighbor v > u re-points to min(Γ(u) ∪ {u})
-    sym = cur.unionByName(cur.select(F.col("b").alias("a"),
-                                     F.col("a").alias("b")))
-    mins = (sym.groupBy("a")
-            .agg(F.min("b").alias("mb"))
-            .select("a", F.least("mb", F.col("a")).alias("m")))
-    large = (
-        sym.filter(F.col("b") > F.col("a"))
-        .join(mins, "a")
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    # small-star: neighbors v <= u (and u itself) re-point to their min
-    sym2 = large.unionByName(large.select(F.col("b").alias("a"),
-                                          F.col("a").alias("b")))
-    sle = sym2.filter(F.col("b") < F.col("a"))
-    mins2 = sle.groupBy("a").agg(F.min("b").alias("m"))
-    small = (
-        sle.join(mins2, "a")
-        .select(F.col("b").alias("node"), F.col("m"))
-        .unionByName(mins2.select(F.col("a").alias("node"), F.col("m")))
-        .filter(F.col("node") != F.col("m"))
-        .select(F.col("node").alias("a"), F.col("m").alias("b"))
-        .distinct()
-    )
-    return small
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 50,
-    materializer: Materializer | None = None,
-    local_threshold: int = CC_LOCAL_EDGE_LIMIT,
-) -> DataFrame:
-    """Large-star/small-star CC — the cluster-scale update rule.
-
-    Same contract as :func:`connected_components` (member_id ->
-    component_id = min member). Min-label propagation converges in
-    O(diameter) shuffles — right for the near-star match graphs blocking
-    produces, wrong for adversarial long chains; the star rules converge
-    in O(log n) rounds on ANY topology, at ~2 shuffles per round. Pick per
-    workload via ``canonical_map(..., algorithm="star")``.
-
-    Convergence probe: (count, hash-sum) signature of the edge multiset —
-    two scalar aggregates per round, no full-set comparison (plus ONE
-    exact set comparison when the signature first repeats).
-
-    ``materializer``: per-round lineage barrier, injectable like
-    :func:`connected_components`'s.
-    """
-    mat = materializer or local_checkpoint_materializer
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    # default-barrier-only, like connected_components (see there)
-    local = _cc_local(e, local_threshold) if materializer is None else None
-    if local is not None:
-        return local
-    verts = mat(
-        e.select("a").unionByName(e.select(F.col("b").alias("a"))).distinct()
-    )
-    cur = mat(e)
-    prev_sig = None
-    prev = None
-    converged = False
-    for _ in range(max_rounds):
-        prev = cur
-        cur = mat(_star_round(cur))
-        sig_row = cur.agg(
-            F.count("*").alias("n"),
-            # decimal sum: a long sum of xxhash64 values overflows ANSI mode
-            F.sum(F.xxhash64(F.concat_ws("\x1f", "a", "b"))
-                  .cast("decimal(28,0)")).alias("h"),
-        ).collect()[0]
-        sig = (sig_row["n"], sig_row["h"])
-        if sig == prev_sig:
-            # the signature alone is probabilistic — a hash-sum collision
-            # between two DIFFERENT edge multisets would declare a
-            # non-converged (invalid) labeling converged, the exact
-            # failure the RuntimeError below guards against. Confirm with
-            # one exact set comparison: counts already match (sig), both
-            # sides are distinct sets, so one-direction exceptAll-empty
-            # proves equality. Runs once, on the two final (smallest)
-            # edge sets — not per round.
-            if cur.exceptAll(prev).isEmpty():
-                converged = True
-                break
-        prev_sig = sig
-    if not converged:
-        # a non-converged small-star state is NOT a valid labeling (members
-        # can still point at non-roots, even at multiple components) —
-        # refuse to return silently-wrong components. O(log n) rounds
-        # suffice for any graph; exhausting the budget means it was set
-        # far too low for the vertex count.
-        raise RuntimeError(
-            f"connected_components_star did not converge within "
-            f"max_rounds={max_rounds}; raise the budget "
-            f"(O(log n) rounds suffice)")
-    # converged star: every non-root points at its component min
-    star = cur.select(F.col("a").alias("member_id"),
-                      F.col("b").alias("component_id"))
-    return (
-        verts.select(F.col("a").alias("member_id"))
-        .join(star, "member_id", "left")
-        .select("member_id",
-                F.coalesce("component_id", "member_id").alias("component_id"))
-    )
 
 
 def mention_node_id(conv_id, norm_surface) -> F.Column:
@@ -363,9 +243,7 @@ def _surface_canon_local(surfaces: DataFrame, limit: int,
         "norm_surface": list(srep), "canonical_id": canon})
 
 
-def surface_canonical_map(surfaces: DataFrame, max_iter: int = 25,
-                          algorithm: str = "label-propagation",
-                          star_rounds: int = 50,
+def surface_canonical_map(surfaces: DataFrame,
                           materializer: Materializer | None = None
                           ) -> DataFrame:
     """(norm_surface, canonical_id) for every surface of ``surfaces``,
@@ -380,9 +258,8 @@ def surface_canonical_map(surfaces: DataFrame, max_iter: int = 25,
     Below ``CC_LOCAL_EDGE_LIMIT`` rows under the default barrier the
     map is built on the driver from one bounded collect (``limit(n+1)``)
     and returned as a ``LocalRelation`` (no Spark job to broadcast it).
-    Above the gate, or with an explicit ``materializer``, CC runs
-    distributed with ``algorithm``/``max_iter``/``star_rounds`` (see
-    :func:`canonical_map`).
+    Above the gate, or with an explicit ``materializer``, the distributed
+    :func:`connected_components` rounds run.
     """
     schema = T.StructType([
         T.StructField("norm_surface", surfaces.schema["norm_surface"].dataType),
@@ -399,12 +276,7 @@ def surface_canonical_map(surfaces: DataFrame, max_iter: int = 25,
                 F.concat(F.lit("e:"), F.col("entity_id")).alias("dst"))
         .distinct()
     )
-    if algorithm == "star":
-        cc = connected_components_star(sedges, max_rounds=star_rounds,
-                                       materializer=materializer)
-    else:
-        cc = connected_components(sedges, max_iter=max_iter,
-                                  materializer=materializer)
+    cc = connected_components(sedges, materializer=materializer)
     scomp = (
         cc.filter(F.col("member_id").startswith("s:"))
         .select(F.expr("substring(member_id, 3)").alias("norm_surface"),
@@ -434,9 +306,7 @@ def surface_canonical_map(surfaces: DataFrame, max_iter: int = 25,
     )
 
 
-def canonical_map(linked_mentions: DataFrame, max_iter: int = 25,
-                  algorithm: str = "label-propagation",
-                  star_rounds: int = 50,
+def canonical_map(linked_mentions: DataFrame,
                   materializer: Materializer | None = None) -> DataFrame:
     """(node_id, conv_id, norm_surface, entity_id, canonical_id).
 
@@ -460,24 +330,16 @@ def canonical_map(linked_mentions: DataFrame, max_iter: int = 25,
 
     Below ``CC_LOCAL_EDGE_LIMIT`` (surface, entity) rows under the
     default barrier the surface map is built on the driver and the join
-    back broadcasts it; the CC knobs below apply only above that gate
-    or with an explicit ``materializer``. ``algorithm``: "label-propagation"
-    (O(diameter) rounds — right for the near-star graphs blocking emits;
-    budget = ``max_iter``) or "star" (large-star/small-star, O(log n)
-    rounds on any topology — the defensive choice when edge data may
-    contain long chains; budget = ``star_rounds``, a separate knob
-    because star rounds and LP iterations are different units and the
-    star path REFUSES to return non-converged labelings).
-    ``materializer`` is the per-round lineage barrier, threaded to
-    whichever CC runs (scratch tables on a cluster).
+    back broadcasts it; above that gate, or with an explicit
+    ``materializer``, :func:`connected_components` runs distributed, with
+    ``materializer`` as its per-round lineage barrier (scratch tables on
+    a cluster).
     """
     nodes = linked_mentions.withColumn(
         "node_id", mention_node_id(F.col("conv_id"), F.col("norm_surface")))
     surfaces = nodes.groupBy("norm_surface", "entity_id").agg(
         F.min("node_id").alias("srep"))
-    surface_canon = surface_canonical_map(
-        surfaces, max_iter=max_iter, algorithm=algorithm,
-        star_rounds=star_rounds, materializer=materializer)
+    surface_canon = surface_canonical_map(surfaces, materializer=materializer)
     return nodes.join(surface_canon, "norm_surface", "left") \
         .withColumn("canonical_id", F.coalesce("canonical_id",
                                                F.col("node_id")))

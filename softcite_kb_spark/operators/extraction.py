@@ -7,15 +7,10 @@ There, extraction results arrive pre-computed from an external ML service
 and are folded per-row in Python; here the extraction itself runs inside
 Spark over transcript turns.
 
-Two execution paths with identical semantics (tests assert equality):
-
-  * native: ``regexp_extract_all`` + ``explode`` — stays fully JVM-side in
-    whole-stage codegen; this is the default and the 100 TB path.
-  * pandas: ``applyInPandas`` grouped by ``conv_id`` with turns explicitly
-    re-sorted by ``turn_idx`` inside each group — the vectorized-Arrow-UDF
-    contract of BASELINE.json (stable turn ordering enforced in-operator,
-    usable for extractors that need conversation context or a gazetteer
-    automaton that regexes can't express).
+Extraction runs natively: ``regexp_extract_all`` + ``explode`` stays
+fully JVM-side in whole-stage codegen. Tests pin it equal to an
+``applyInPandas`` oracle (tests/test_extraction.py) that re-sorts turns
+by ``turn_idx`` inside each conversation.
 
 Blacklist filtering is a broadcast left-anti join (ref
 software_mention_import.py:120-124 membership test) — at scale the
@@ -289,66 +284,6 @@ def extract_triples(
             .drop("__bl_term")
         )
     return triples
-
-
-def extract_triples_pandas(
-    transcripts: DataFrame,
-    blacklist_terms: Iterable[str] = (),
-    patterns: list[tuple[str, str]] | None = None,
-) -> DataFrame:
-    """Arrow/pandas-UDF path: applyInPandas grouped by conv_id.
-
-    Semantically identical to :func:`extract_triples`; exists to host
-    extractors that need full-conversation context. Turns are re-sorted by
-    ``turn_idx`` inside each group (stable turn ordering independent of
-    shuffle order), then vectorized ``Series.str.extractall`` runs per
-    pattern — no per-row Python.
-    """
-    import re
-
-    pats = patterns or TRIPLE_PATTERNS
-    compiled = [(pred, re.compile(pat)) for pred, pat in pats]
-    bl = {t.upper() for t in blacklist_terms}
-
-    def _is_num(s: pd.Series) -> pd.Series:
-        # mirror Spark try_cast('double') EXACTLY (the native path's
-        # is_number): it trims, accepts nan/inf/infinity tokens in any
-        # case/sign, and tolerates a trailing d/f float suffix — plain
-        # pd.to_numeric would keep 'NaN'/'3d' mentions the native path
-        # drops, breaking the two-path equality contract
-        t = s.str.strip().str.lower()
-        special = t.isin(["nan", "+nan", "-nan", "inf", "+inf", "-inf",
-                          "infinity", "+infinity", "-infinity"])
-        stripped = t.str.replace(r"[df]$", "", regex=True)
-        return special | pd.to_numeric(stripped, errors="coerce").notna()
-
-    def extract(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx", kind="mergesort")  # stable order
-        frames = []
-        for pred, rx in compiled:
-            m = pdf["text"].str.extractall(rx)
-            if m.empty:
-                continue
-            m = m.reset_index(level=1, drop=True)
-            m.columns = ["subj", "obj"]
-            m = m.join(pdf[["conv_id", "turn_idx"]])
-            m["pred"] = pred
-            frames.append(m[["conv_id", "turn_idx", "subj", "pred", "obj"]])
-        if not frames:
-            return pd.DataFrame(columns=[f.name for f in TRIPLE_SCHEMA.fields])
-        out = pd.concat(frames, ignore_index=True)
-        keep = ~out["subj"].str.upper().isin(bl) & ~_is_num(out["subj"])
-        obj_is_name = out["pred"] != PRED_VERSION
-        keep &= ~(obj_is_name & (out["obj"].str.upper().isin(bl) | _is_num(out["obj"])))
-        out = out[keep]
-        out["turn_idx"] = out["turn_idx"].astype("int32")
-        return out
-
-    return (
-        transcripts.select("conv_id", "turn_idx", "text")
-        .groupBy("conv_id")
-        .applyInPandas(extract, schema=TRIPLE_SCHEMA)
-    )
 
 
 def _gazetteer_surfaces(authority_entities: DataFrame):

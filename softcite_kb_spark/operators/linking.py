@@ -128,131 +128,6 @@ def mention_langs(triples: DataFrame) -> DataFrame:
     )
 
 
-def generate_candidates(
-    folded_mentions: DataFrame,
-    authority_entities: DataFrame,
-    authority_ids: DataFrame | None = None,
-    triples: DataFrame | None = None,
-    broadcast: bool | None = None,
-) -> DataFrame:
-    """Blocked candidate generation: one row per (mention-group, entity).
-
-    The authority side is the dimension and must never become the
-    SHUFFLE partner of a 10^12-row mention table when it is genuinely
-    small — but hinting ``F.broadcast`` unconditionally OOMs the moment
-    the authority is Wikidata-scale. ``broadcast`` size-gates the hint:
-    None probes via :func:`authority_fits_broadcast`; past the gate the
-    join runs as a plain shuffle join (AQE's skew-join splits hot
-    mention surfaces at runtime — enabled in session.py — and
-    :mod:`softcite_kb_spark.functions.skew` offers explicit
-    salting/split plans where AQE can't reach). Candidates carry a
-    method + score; the strong-id path wins ties via score then method
-    ordering.
-    """
-    if broadcast is None:
-        broadcast = authority_fits_broadcast(authority_entities,
-                                             authority_ids)
-    m = folded_mentions.select("conv_id", "norm_surface", "n_mentions")
-
-    # union the (tiny) key dimensions FIRST so the 10^12-row mention side
-    # is scanned exactly once — a per-method join would re-scan it per path
-    keys = authority_block_keys(authority_entities)
-    if authority_ids is not None:
-        pkg = (
-            authority_ids.filter(F.col("id_kind") == "pkg")
-            .select(norm_name(F.col("id_value")).alias("block_key"),
-                    "entity_id",
-                    F.lit(METHOD_STRONG_ID).alias("method"))
-        )
-        keys = keys.unionByName(pkg)
-
-    cands = (
-        m.join(_hint(keys, broadcast),
-               m.norm_surface == keys.block_key, "inner")
-        .drop("block_key")
-    )
-
-    score_map = F.create_map(
-        *[x for kv in _METHOD_SCORE.items() for x in (F.lit(kv[0]), F.lit(kv[1]))])
-    cands = cands.withColumn("score", score_map[F.col("method")])
-
-    # language post-validation (J6): candidate survives iff language claim
-    # sets overlap or either side is empty/unknown
-    if triples is not None:
-        ml = mention_langs(triples)
-        el = entity_langs(authority_entities)
-        cands = (
-            cands
-            .join(ml, "norm_surface", "left")
-            .join(_hint(el, broadcast), "entity_id", "left")
-            .filter(
-                F.col("mention_langs").isNull()
-                | F.col("langs").isNull()
-                | (F.size("mention_langs") == 0)
-                | (F.size("langs") == 0)
-                | F.arrays_overlap("mention_langs", "langs")
-            )
-            .drop("mention_langs", "langs")
-        )
-    return cands
-
-
-def vote_links(
-    candidates: DataFrame,
-    min_total: int = 2,
-    majority: float = 0.5,
-) -> DataFrame:
-    """Disambiguation voting (A8, knowledge_base.py:404-494).
-
-    Votes are mention counts summed per (norm_surface, entity_id) across the
-    whole corpus. A surface's winning entity is accepted iff
-    total_votes >= min_total and winner_votes > majority * total_votes.
-    Window `row_number()=1` with a deterministic tiebreak picks the winner.
-    """
-    # a mention-group may match one entity through several methods — count
-    # its votes once (max score), attribute the best-scoring method
-    per_group = (
-        candidates
-        .groupBy("conv_id", "norm_surface", "entity_id")
-        .agg(F.max("n_mentions").alias("n_mentions"),
-             F.max(F.struct("score", "method")).alias("best"))
-    )
-    # a group votes only for its best-scoring candidate(s): scoring decides
-    # within a group, voting decides across groups (reference order: score
-    # then count, knowledge_base.py:404-494). Exact ties keep both rows —
-    # the majority rule then correctly refuses genuinely ambiguous names.
-    wg = W.partitionBy("conv_id", "norm_surface")
-    per_group = (
-        per_group
-        .withColumn("__mx", F.max(F.col("best.score")).over(wg))
-        .filter(F.col("best.score") == F.col("__mx"))
-        .drop("__mx")
-    )
-    votes = (
-        per_group
-        .groupBy("norm_surface", "entity_id")
-        .agg(F.sum("n_mentions").alias("votes"),
-             F.max("best").alias("best"))
-        .select("norm_surface", "entity_id", "votes",
-                F.col("best.score").alias("score"),
-                F.col("best.method").alias("method"))
-    )
-    w = W.partitionBy("norm_surface")
-    votes = votes.withColumn("total_votes", F.sum("votes").over(w))
-    rank = W.partitionBy("norm_surface").orderBy(
-        F.desc("votes"), F.desc("score"), F.asc("entity_id"))
-    return (
-        votes.withColumn("rn", F.row_number().over(rank))
-        .filter(
-            (F.col("rn") == 1)
-            & (F.col("total_votes") >= min_total)
-            & (F.col("votes") > F.col("total_votes") * majority)
-        )
-        .select("norm_surface", "entity_id", "votes", "total_votes",
-                "score", "method")
-    )
-
-
 def surface_stats(folded_mentions: DataFrame) -> DataFrame:
     """(norm_surface, total n_mentions) — the only
     conversation-dependent input the voting decision needs (see
@@ -273,8 +148,8 @@ def generate_surface_candidates(
     granularity — the blocking join keyed on norm_surface makes the
     candidate set, the method prior, and the language post-validation
     all pure functions of the surface, so expanding them per
-    conversation group (as :func:`generate_candidates` does) multiplies
-    identical rows by the number of conversations for no information.
+    conversation group multiplies identical rows by the number of
+    conversations for no information.
     ``stats`` is :func:`surface_stats` output; ``surface_mentions``
     rides along for the voting stage.
 
@@ -328,9 +203,10 @@ def vote_links_surface(
     min_total: int = 2,
     majority: float = 0.5,
 ) -> DataFrame:
-    """:func:`vote_links` collapsed to surface granularity — EXACTLY the
-    same accepted set, derived from the observation that candidate sets
-    are surface-pure:
+    """Disambiguation voting (A8, knowledge_base.py:404-494) at surface
+    granularity — EXACTLY the accepted set of voting per conversation
+    group, derived from the observation that candidate sets are
+    surface-pure:
 
     for a surface s, every conversation group carries the SAME candidate
     entities with the SAME scores (the blocking join keys on s alone),
@@ -346,8 +222,8 @@ def vote_links_surface(
     candidates) — and every window here partitions over surface-level
     rows (a handful of candidates each), so the hot-surface skew that
     motivated the group-level plan's groupBy-based rep selection cannot
-    funnel a reducer. Equality with the group-level path is pinned by
-    tests on every fixture corpus.
+    funnel a reducer. Equality with group-level voting (the oracle in
+    tests/test_linking.py) is pinned by tests on every fixture corpus.
     """
     per = (
         candidates
@@ -390,8 +266,8 @@ def link_mentions(
     entity_id NULL = unlinked (OOV or below voting thresholds).
 
     The decision runs at surface granularity (:func:`vote_links_surface`
-    — provably identical to the group-level :func:`vote_links` path,
-    which remains as the reference implementation): the 10^12-row
+    — provably identical to group-level voting, which tests keep as the
+    oracle): the 10^12-row
     mention table is touched exactly twice, once by the
     map-side-combined surface stats and once by the final accepted-map
     join. A hot surface (the "R" problem, merge.py:186-189) is one row

@@ -273,10 +273,8 @@ class IncrementalKGPipeline(KGPipeline):
         surfaces = stats.select("norm_surface", "srep").join(
             accepted.select("norm_surface", "entity_id"), "norm_surface",
             "left")
-        return cz.surface_canonical_map(
-            surfaces, max_iter=self.config.cc_max_iter,
-            algorithm=self.config.cc_algorithm,
-            materializer=self.materializer)
+        return cz.surface_canonical_map(surfaces,
+                                        materializer=self.materializer)
 
     def _node_columns(self) -> list[str]:
         return [f.name for f in

@@ -39,10 +39,6 @@ from softcite_kb_spark.storage import Snapshot, TableStore
 class PipelineConfig:
     blacklist: tuple[str, ...] = ()
     min_vote_total: int = 2
-    cc_max_iter: int = 25
-    # "label-propagation" (O(diameter), right for blocking's near-star
-    # graphs) or "star" (large-star/small-star, O(log n) on any topology)
-    cc_algorithm: str = "label-propagation"
     source_name: str = "transcripts"
     # >0 enables incremental ingest at scale: stage-1 outputs carry a
     # conv-hash bucket column and are PARTITIONED by it, so
@@ -56,8 +52,6 @@ class PipelineConfig:
         payload = json.dumps(
             {"blacklist": sorted(self.blacklist),
              "min_vote_total": self.min_vote_total,
-             "cc_max_iter": self.cc_max_iter,
-             "cc_algorithm": self.cc_algorithm,
              "source_name": self.source_name,
              "partition_buckets": self.partition_buckets,
              "extra": self.extra},
@@ -566,9 +560,7 @@ class KGPipeline:
         # stage stays unrecorded and the re-run rewrites all four — the
         # same torn-window-then-repair the sequential order had.
         canon = self._stage_barrier(
-            cz.canonical_map(linked, max_iter=self.config.cc_max_iter,
-                             algorithm=self.config.cc_algorithm,
-                             materializer=self.materializer))
+            cz.canonical_map(linked, materializer=self.materializer))
         stmts = cz.fold_statements(triples, canon, source=self.config.source_name)
         from concurrent.futures import ThreadPoolExecutor
 

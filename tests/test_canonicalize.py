@@ -2,9 +2,12 @@
 statement count-summing, node/edge materialization."""
 
 import pandas as pd
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from softcite_kb_spark import datagen
+from softcite_kb_spark.materialize import local_checkpoint_materializer
 from softcite_kb_spark.operators import canonicalize as cz
 from softcite_kb_spark.operators import extraction as ex
 from softcite_kb_spark.operators import linking as lk
@@ -49,17 +52,13 @@ def _match_pairs(linked_mentions):
     )
 
 
-def _canonical_map_group_level(linked_mentions, algorithm="label-propagation"):
+def _canonical_map_group_level(linked_mentions):
     """Oracle for cz.canonical_map: CC over the full GROUP-level match
     graph (one node per conversation mention group, O(corpus) nodes),
     entity hub preferred, else the component's min node id."""
     nodes = linked_mentions.withColumn(
         "node_id", cz.mention_node_id(F.col("conv_id"), F.col("norm_surface")))
-    pairs = _match_pairs(linked_mentions)
-    if algorithm == "star":
-        cc = cz.connected_components_star(pairs)
-    else:
-        cc = cz.connected_components(pairs)
+    cc = cz.connected_components(_match_pairs(linked_mentions))
     hubs = (
         cc.filter(F.col("member_id").startswith("e:"))
         .groupBy("component_id")
@@ -108,37 +107,10 @@ def test_cc_long_chain_converges(spark):
     assert comps == {"n000"}
 
 
-def test_cc_star_matches_union_find_oracle(spark):
-    """Both update rules must agree with the union-find oracle on mixed
-    topologies (chain + star + pair + triangle)."""
-    pairs = [("a", "b"), ("b", "c"), ("c", "d"),
-             ("h", "x1"), ("h", "x2"), ("h", "x3"),
-             ("p", "q"),
-             ("z1", "z2"), ("z2", "z3"), ("z1", "z3")]
-    df = spark.createDataFrame(pd.DataFrame(pairs, columns=["src", "dst"]))
-    got = {r.member_id: r.component_id
-           for r in cz.connected_components_star(df).collect()}
-    assert got == _union_find(pairs)
-
-
-def test_cc_star_pathological_chain(spark):
-    """A 10^4-node path graph: the worst case for O(diameter) label
-    propagation; large-star/small-star must converge within the O(log n)
-    round budget and label every node with the chain head."""
-    n = 10_000
-    pairs = [(f"n{i:05d}", f"n{i + 1:05d}") for i in range(n - 1)]
-    df = spark.createDataFrame(pd.DataFrame(pairs, columns=["src", "dst"]))
-    # local_threshold=0: this test exists to pin the DISTRIBUTED star
-    # rule's O(log n) convergence on the worst-case topology
-    got = cz.connected_components_star(df, max_rounds=25, local_threshold=0)
-    comps = got.select("component_id").distinct().collect()
-    assert {r.component_id for r in comps} == {"n00000"}
-    assert got.count() == n
-
-
-def test_cc_star_equals_label_propagation(spark):
-    """The two update rules produce the identical labeling on a pseudo-
-    random graph (md5-derived edges, deterministic)."""
+def test_cc_distributed_equals_union_find_md5_graph(spark):
+    """The distributed label-propagation rounds (explicit barrier, so the
+    driver path cannot serve the call) equal the union-find oracle on a
+    pseudo-random graph (md5-derived edges, deterministic)."""
     import hashlib
 
     def h(i, salt):
@@ -148,15 +120,39 @@ def test_cc_star_equals_label_propagation(spark):
              for i in range(120)]
     pairs = [(a, b) for a, b in pairs if a != b]
     df = spark.createDataFrame(pd.DataFrame(pairs, columns=["src", "dst"]))
-    # local_threshold=0 so both DISTRIBUTED update rules are exercised
-    # (the driver-side fast path would otherwise serve both calls)
     lp = {r.member_id: r.component_id
           for r in cz.connected_components(
-              df, max_iter=40, local_threshold=0).collect()}
-    st = {r.member_id: r.component_id
-          for r in cz.connected_components_star(
-              df, local_threshold=0).collect()}
-    assert lp == st == _union_find(pairs)
+              df, max_iter=40,
+              materializer=local_checkpoint_materializer).collect()}
+    assert lp == _union_find(pairs)
+
+
+@st.composite
+def edge_lists(draw):
+    n = draw(st.integers(2, 12))
+    m = draw(st.integers(1, 20))
+    return [
+        (f"v{draw(st.integers(0, n - 1))}", f"v{draw(st.integers(0, n - 1))}")
+        for _ in range(m)
+    ]
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(edge_lists())
+def test_cc_random_graphs_match_union_find(spark, pairs):
+    """Random small graphs: the driver union-find path and the
+    distributed rounds both equal the oracle."""
+    pairs = [p for p in pairs if p[0] != p[1]]
+    if not pairs:
+        return
+    df = spark.createDataFrame(pd.DataFrame(pairs, columns=["src", "dst"]))
+    want = _union_find(pairs)
+    for mat in (None, local_checkpoint_materializer):
+        got = {r.member_id: r.component_id
+               for r in cz.connected_components(
+                   df, max_iter=40, materializer=mat).collect()}
+        assert got == want, mat
 
 
 def _pipeline_frames(spark, corpus):
@@ -291,39 +287,37 @@ def test_nodes_and_edges_materialize(spark, corpus):
     assert edges.filter(F.col("count") <= 0).count() == 0
 
 
-def test_cc_star_refuses_nonconverged(spark):
+def test_cc_refuses_nonconverged(spark):
     """Exhausting the round budget raises instead of returning a
     silently-fragmented labeling."""
     import pytest
 
     pairs = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(60)]
     df = spark.createDataFrame(pd.DataFrame(pairs, columns=["src", "dst"]))
-    # local_threshold=0 pins the DISTRIBUTED star rounds — the driver-side
-    # fast path would close this small chain without ever hitting the
-    # round budget (its own equivalence is pinned separately below)
+    # an explicit materializer pins the DISTRIBUTED rounds — the driver
+    # path would close this small chain without ever hitting the round
+    # budget (its own equivalence is pinned separately below)
     with pytest.raises(RuntimeError, match="did not converge"):
-        cz.connected_components_star(df, max_rounds=2, local_threshold=0)
+        cz.connected_components(
+            df, max_iter=2, materializer=local_checkpoint_materializer)
 
 
 def test_cc_local_fast_path_equals_distributed(spark):
     """The size-gated driver-side union-find returns the identical
-    labeling as both distributed update rules, and the gate's bounded
-    probe falls through to the distributed path when the edge set
-    exceeds the threshold."""
+    labeling as the distributed rounds, and the gate's bounded probe
+    falls through to the distributed path when the edge set exceeds the
+    threshold."""
     pairs = [("a", "b"), ("b", "c"), ("c", "d"),
              ("h", "x1"), ("h", "x2"), ("h", "x3"),
              ("p", "q"),
              ("z1", "z2"), ("z2", "z3"), ("z1", "z3")]
     df = spark.createDataFrame(pd.DataFrame(pairs, columns=["src", "dst"]))
     local = {r.member_id: r.component_id
-             for r in cz.connected_components_star(df).collect()}
-    dist_star = {r.member_id: r.component_id
-                 for r in cz.connected_components_star(
-                     df, local_threshold=0).collect()}
-    dist_lp = {r.member_id: r.component_id
-               for r in cz.connected_components(
-                   df, local_threshold=0).collect()}
-    assert local == dist_star == dist_lp == _union_find(pairs)
+             for r in cz.connected_components(df).collect()}
+    dist = {r.member_id: r.component_id
+            for r in cz.connected_components(
+                df, materializer=local_checkpoint_materializer).collect()}
+    assert local == dist == _union_find(pairs)
     # the driver result is an Arrow LocalRelation (broadcast needs no
     # job), not a parallelized LogicalRDD
     assert _plan_node(cz.connected_components(df)) == "LocalRelation"
@@ -355,14 +349,9 @@ def test_build_nodes_label_most_frequent_raw(spark):
 
 def test_canonical_map_surface_collapse_equals_group_level(spark, corpus):
     """The surface-granularity canonical_map must equal the group-level
-    oracle EXACTLY — same canonical for every mention group — under both
-    CC algorithms, on the driver path and on the distributed path (an
-    explicit materializer), with unlinked surfaces present."""
-    from softcite_kb_spark import datagen
-    from softcite_kb_spark.materialize import local_checkpoint_materializer
-    from softcite_kb_spark.operators import extraction as ex
-    from softcite_kb_spark.operators import linking as lk
-
+    oracle EXACTLY — same canonical for every mention group — on the
+    driver path and on the distributed path (an explicit materializer),
+    with unlinked surfaces present."""
     bl = spark.createDataFrame(pd.DataFrame({"term": datagen.BLACKLIST}))
     triples = ex.extract_triples(corpus["transcripts"], bl)
     folded = ex.fold_mentions(ex.mentions_from_triples(triples))
@@ -370,17 +359,14 @@ def test_canonical_map_surface_collapse_equals_group_level(spark, corpus):
         folded, corpus["authority_entities"], corpus["authority_ids"],
         triples, min_total=1).localCheckpoint()
     assert linked.filter(F.col("entity_id").isNull()).count() > 0
-    for algorithm in ("label-propagation", "star"):
-        ref = _canonical_map_group_level(linked, algorithm=algorithm)
-        cols = sorted(ref.columns)
-        for mat in (None, local_checkpoint_materializer):
-            got = cz.canonical_map(linked, algorithm=algorithm,
-                                   materializer=mat)
-            assert sorted(got.columns) == cols
-            assert got.count() == ref.count()
-            a, b = got.select(*cols), ref.select(*cols)
-            assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), \
-                (algorithm, mat)
+    ref = _canonical_map_group_level(linked)
+    cols = sorted(ref.columns)
+    for mat in (None, local_checkpoint_materializer):
+        got = cz.canonical_map(linked, materializer=mat)
+        assert sorted(got.columns) == cols
+        assert got.count() == ref.count()
+        a, b = got.select(*cols), ref.select(*cols)
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), mat
 
 
 #: hand-built linked mentions (conv_id, norm_surface, entity_id) covering
@@ -427,8 +413,6 @@ def test_canonical_map_paths_equal_on_edge_cases(spark):
     included, on bridging, shared-entity, unlinked, null and non-ASCII
     cases; the driver path's surface map is a LocalRelation that the
     join back broadcasts."""
-    from softcite_kb_spark.materialize import local_checkpoint_materializer
-
     linked = _edge_case_linked(spark)
     drv = cz.canonical_map(linked)
     dist = cz.canonical_map(linked, materializer=local_checkpoint_materializer)
@@ -452,7 +436,6 @@ def test_surface_canon_from_state_paths_equal(spark, tmp_path):
     surface map: driver path == distributed path (explicit
     materializer) for every surface, null included, and both equal the
     group-level oracle's per-surface canonical."""
-    from softcite_kb_spark.materialize import local_checkpoint_materializer
     from softcite_kb_spark.plans.incremental import IncrementalKGPipeline
     from softcite_kb_spark.plans.pipeline import PipelineConfig
     from softcite_kb_spark.storage import TableStore

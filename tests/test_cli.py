@@ -83,13 +83,17 @@ def test_cli_run_then_ingest_end_to_end(spark, cli_corpus, tmp_path,
     assert out3["stages"]["link"] == "ran"
 
 
-def test_cli_rejects_unknown_pipeline_keys(tmp_path):
+@pytest.mark.parametrize("key", ["not_a_knob", "cc_algorithm",
+                                 "cc_max_iter"])
+def test_cli_rejects_unknown_pipeline_keys(tmp_path, key):
+    """Unknown keys, including the removed connected-components knobs,
+    fail loudly instead of being ignored."""
     cfgp = str(tmp_path / "bad.json")
     with open(cfgp, "w") as f:
         json.dump({"store": {"kind": "parquet",
                              "root": str(tmp_path / "kb")},
-                   "pipeline": {"not_a_knob": 1}}, f)
-    with pytest.raises(SystemExit, match="not_a_knob"):
+                   "pipeline": {key: 1}}, f)
+    with pytest.raises(SystemExit, match=key):
         cli.main(["run", "--config", cfgp])
 
 

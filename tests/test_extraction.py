@@ -1,11 +1,73 @@
 """Stage-1 tests: extraction fidelity (P/R >= 0.95), path equivalence,
 blacklist semantics, stable turn ordering, same-name folding."""
 
+from typing import Iterable
+
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from softcite_kb_spark import datagen
 from softcite_kb_spark.operators import extraction as ex
+
+
+def _extract_triples_pandas(
+    transcripts: DataFrame,
+    blacklist_terms: Iterable[str] = (),
+) -> DataFrame:
+    """Oracle for ``ex.extract_triples``: applyInPandas grouped by conv_id.
+
+    Semantically identical to the native path. Turns are re-sorted by
+    ``turn_idx`` inside each group (stable turn ordering independent of
+    shuffle order), then vectorized ``Series.str.extractall`` runs per
+    pattern — no per-row Python.
+    """
+    import re
+
+    compiled = [(pred, re.compile(pat)) for pred, pat in ex.TRIPLE_PATTERNS]
+    bl = {t.upper() for t in blacklist_terms}
+    version = ex.PRED_VERSION
+    columns = [f.name for f in ex.TRIPLE_SCHEMA.fields]
+
+    def _is_num(s: pd.Series) -> pd.Series:
+        # mirror Spark try_cast('double') EXACTLY (the native path's
+        # is_number): it trims, accepts nan/inf/infinity tokens in any
+        # case/sign, and tolerates a trailing d/f float suffix — plain
+        # pd.to_numeric would keep 'NaN'/'3d' mentions the native path
+        # drops, breaking the two-path equality contract
+        t = s.str.strip().str.lower()
+        special = t.isin(["nan", "+nan", "-nan", "inf", "+inf", "-inf",
+                          "infinity", "+infinity", "-infinity"])
+        stripped = t.str.replace(r"[df]$", "", regex=True)
+        return special | pd.to_numeric(stripped, errors="coerce").notna()
+
+    def extract(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("turn_idx", kind="mergesort")  # stable order
+        frames = []
+        for pred, rx in compiled:
+            m = pdf["text"].str.extractall(rx)
+            if m.empty:
+                continue
+            m = m.reset_index(level=1, drop=True)
+            m.columns = ["subj", "obj"]
+            m = m.join(pdf[["conv_id", "turn_idx"]])
+            m["pred"] = pred
+            frames.append(m[["conv_id", "turn_idx", "subj", "pred", "obj"]])
+        if not frames:
+            return pd.DataFrame(columns=columns)
+        out = pd.concat(frames, ignore_index=True)
+        keep = ~out["subj"].str.upper().isin(bl) & ~_is_num(out["subj"])
+        obj_is_name = out["pred"] != version
+        keep &= ~(obj_is_name & (out["obj"].str.upper().isin(bl) | _is_num(out["obj"])))
+        out = out[keep]
+        out["turn_idx"] = out["turn_idx"].astype("int32")
+        return out
+
+    return (
+        transcripts.select("conv_id", "turn_idx", "text")
+        .groupBy("conv_id")
+        .applyInPandas(extract, schema=ex.TRIPLE_SCHEMA)
+    )
 
 
 def _blacklist_df(spark):
@@ -34,7 +96,7 @@ def test_triple_extraction_pr(spark, corpus):
 
 def test_pandas_path_equivalent(spark, corpus):
     native = ex.extract_triples(corpus["transcripts"], _blacklist_df(spark))
-    arrow = ex.extract_triples_pandas(
+    arrow = _extract_triples_pandas(
         corpus["transcripts"], blacklist_terms=datagen.BLACKLIST)
     a = {tuple(r) for r in native.collect()}
     b = {tuple(r) for r in arrow.collect()}
@@ -134,7 +196,7 @@ def test_numeric_filter_path_parity_special_tokens(spark):
     })
     t = spark.createDataFrame(pdf)
     nat = sorted(map(tuple, ex.extract_triples(t).collect()))
-    pnd = sorted(map(tuple, ex.extract_triples_pandas(t).collect()))
+    pnd = sorted(map(tuple, _extract_triples_pandas(t).collect()))
     assert nat == pnd
     subs = {r[2] for r in nat}
     assert "NaN" not in subs and "Infinity" not in subs

@@ -1,15 +1,136 @@
 """Stage-2 tests: blocking keys, language post-validation, voting, link accuracy."""
 
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import Window as W
 
 from softcite_kb_spark import datagen
+from softcite_kb_spark.functions.text import norm_name
 from softcite_kb_spark.operators import extraction as ex
 from softcite_kb_spark.operators import linking as lk
 
 
 def _norm(s: str) -> str:
     return " ".join(s.lower().replace("-", " ").split())
+
+
+def _generate_candidates(
+    folded_mentions: DataFrame,
+    authority_entities: DataFrame,
+    authority_ids: DataFrame | None = None,
+    triples: DataFrame | None = None,
+) -> DataFrame:
+    """Oracle: blocked candidate generation at GROUP granularity, one row
+    per (mention-group, entity). The authority hint is size-gated by
+    :func:`lk.authority_fits_broadcast`. Candidates carry a method +
+    score; the strong-id path wins ties via score then method ordering.
+    """
+    broadcast = lk.authority_fits_broadcast(authority_entities,
+                                            authority_ids)
+    m = folded_mentions.select("conv_id", "norm_surface", "n_mentions")
+
+    # union the (tiny) key dimensions FIRST so the 10^12-row mention side
+    # is scanned exactly once — a per-method join would re-scan it per path
+    keys = lk.authority_block_keys(authority_entities)
+    if authority_ids is not None:
+        pkg = (
+            authority_ids.filter(F.col("id_kind") == "pkg")
+            .select(norm_name(F.col("id_value")).alias("block_key"),
+                    "entity_id",
+                    F.lit(lk.METHOD_STRONG_ID).alias("method"))
+        )
+        keys = keys.unionByName(pkg)
+
+    cands = (
+        m.join(lk._hint(keys, broadcast),
+               m.norm_surface == keys.block_key, "inner")
+        .drop("block_key")
+    )
+
+    score_map = F.create_map(
+        *[x for kv in lk._METHOD_SCORE.items()
+          for x in (F.lit(kv[0]), F.lit(kv[1]))])
+    cands = cands.withColumn("score", score_map[F.col("method")])
+
+    # language post-validation (J6): candidate survives iff language claim
+    # sets overlap or either side is empty/unknown
+    if triples is not None:
+        ml = lk.mention_langs(triples)
+        el = lk.entity_langs(authority_entities)
+        cands = (
+            cands
+            .join(ml, "norm_surface", "left")
+            .join(lk._hint(el, broadcast), "entity_id", "left")
+            .filter(
+                F.col("mention_langs").isNull()
+                | F.col("langs").isNull()
+                | (F.size("mention_langs") == 0)
+                | (F.size("langs") == 0)
+                | F.arrays_overlap("mention_langs", "langs")
+            )
+            .drop("mention_langs", "langs")
+        )
+    return cands
+
+
+def _vote_links(
+    candidates: DataFrame,
+    min_total: int = 2,
+    majority: float = 0.5,
+) -> DataFrame:
+    """Oracle: disambiguation voting (A8, knowledge_base.py:404-494) per
+    mention group, which ``lk.vote_links_surface`` must match exactly.
+
+    Votes are mention counts summed per (norm_surface, entity_id) across the
+    whole corpus. A surface's winning entity is accepted iff
+    total_votes >= min_total and winner_votes > majority * total_votes.
+    Window `row_number()=1` with a deterministic tiebreak picks the winner.
+    """
+    # a mention-group may match one entity through several methods — count
+    # its votes once (max score), attribute the best-scoring method
+    per_group = (
+        candidates
+        .groupBy("conv_id", "norm_surface", "entity_id")
+        .agg(F.max("n_mentions").alias("n_mentions"),
+             F.max(F.struct("score", "method")).alias("best"))
+    )
+    # a group votes only for its best-scoring candidate(s): scoring decides
+    # within a group, voting decides across groups (reference order: score
+    # then count, knowledge_base.py:404-494). Exact ties keep both rows —
+    # the majority rule then correctly refuses genuinely ambiguous names.
+    wg = W.partitionBy("conv_id", "norm_surface")
+    per_group = (
+        per_group
+        .withColumn("__mx", F.max(F.col("best.score")).over(wg))
+        .filter(F.col("best.score") == F.col("__mx"))
+        .drop("__mx")
+    )
+    votes = (
+        per_group
+        .groupBy("norm_surface", "entity_id")
+        .agg(F.sum("n_mentions").alias("votes"),
+             F.max("best").alias("best"))
+        .select("norm_surface", "entity_id", "votes",
+                F.col("best.score").alias("score"),
+                F.col("best.method").alias("method"))
+    )
+    w = W.partitionBy("norm_surface")
+    votes = votes.withColumn("total_votes", F.sum("votes").over(w))
+    rank = W.partitionBy("norm_surface").orderBy(
+        F.desc("votes"), F.desc("score"), F.asc("entity_id"))
+    return (
+        votes.withColumn("rn", F.row_number().over(rank))
+        .filter(
+            (F.col("rn") == 1)
+            & (F.col("total_votes") >= min_total)
+            & (F.col("votes") > F.col("total_votes") * majority)
+        )
+        .select("norm_surface", "entity_id", "votes", "total_votes",
+                "score", "method")
+    )
+
+
 
 
 def _linked(spark, corpus, min_total=1):
@@ -87,7 +208,7 @@ def test_voting_majority_rule(spark):
         "method": ["label", "alias", "label", "label"],
         "score": [1.0, 0.9, 1.0, 1.0],
     })
-    votes = lk.vote_links(spark.createDataFrame(pdf), min_total=2)
+    votes = _vote_links(spark.createDataFrame(pdf), min_total=2)
     got = {r.norm_surface: r.entity_id for r in votes.collect()}
     assert got == {"tool": "QA"}  # "even" is ambiguous -> dropped
 
@@ -102,8 +223,8 @@ def test_voting_min_total(spark):
         "score": [1.0],
     })
     df = spark.createDataFrame(pdf)
-    assert lk.vote_links(df, min_total=2).count() == 0
-    assert lk.vote_links(df, min_total=1).count() == 1
+    assert _vote_links(df, min_total=2).count() == 0
+    assert _vote_links(df, min_total=1).count() == 1
 
 
 def test_language_post_validation(spark):
@@ -124,22 +245,25 @@ def test_language_post_validation(spark):
     triples = spark.createDataFrame(pd.DataFrame({
         "conv_id": ["c1"], "turn_idx": pd.array([0], dtype="int32"),
         "subj": ["Toolkit"], "pred": ["written_in"], "obj": ["Python"]}))
-    cands = lk.generate_candidates(folded, auth, None, triples)
-    got = {r.entity_id for r in cands.collect()}
-    assert got == {"QA"}
+    cands = _generate_candidates(folded, auth, None, triples)
+    assert {r.entity_id for r in cands.collect()} == {"QA"}
+    # the production surface-granularity path applies the same filter
+    cands = lk.generate_surface_candidates(
+        lk.surface_stats(folded), auth, None, triples)
+    assert {r.entity_id for r in cands.collect()} == {"QA"}
 
 
 def _linked_pergroup_reference(spark, corpus, min_total=1):
-    """The GROUP-granularity stage-2 path (generate_candidates +
-    vote_links + join) — kept as the reference implementation that the
+    """The GROUP-granularity stage-2 path (_generate_candidates +
+    _vote_links + join) — the reference implementation that the
     surface-granularity production path must match exactly."""
     bl = spark.createDataFrame(pd.DataFrame({"term": datagen.BLACKLIST}))
     triples = ex.extract_triples(corpus["transcripts"], bl)
     folded = ex.fold_mentions(ex.mentions_from_triples(triples))
-    cands = lk.generate_candidates(
+    cands = _generate_candidates(
         folded, corpus["authority_entities"], corpus["authority_ids"],
         triples)
-    accepted = lk.vote_links(cands, min_total=min_total).select(
+    accepted = _vote_links(cands, min_total=min_total).select(
         "norm_surface", "entity_id",
         F.col("method").alias("link_method"),
         F.col("score").alias("link_score"))
@@ -148,7 +272,7 @@ def _linked_pergroup_reference(spark, corpus, min_total=1):
 
 def test_surface_voting_equals_group_voting(spark, corpus):
     """The factorized surface-granularity decision (vote_links_surface)
-    must produce EXACTLY the group-granularity vote_links result — the
+    must produce EXACTLY the group-granularity _vote_links result — the
     algebraic collapse (candidate sets are surface-pure) pinned on a
     real corpus, at two vote floors."""
     for min_total in (1, 3):

@@ -8,7 +8,8 @@ cluster-side, fault-tolerant choice). This is the contract that makes
 import pandas as pd
 import pytest
 
-from softcite_kb_spark.materialize import ScratchTableMaterializer
+from softcite_kb_spark.materialize import (
+    ScratchTableMaterializer, local_checkpoint_materializer)
 from softcite_kb_spark.operators import canonicalize as cz
 from softcite_kb_spark.operators import similarity as sim
 from softcite_kb_spark.storage import TableStore
@@ -26,28 +27,17 @@ def _edges(spark):
     return spark.createDataFrame(pd.DataFrame(rows, columns=["src", "dst"]))
 
 
-def test_star_cc_scratch_equals_local_checkpoint(spark, scratch):
-    # local_threshold=0: this test pins the DISTRIBUTED rounds' barrier
-    # contract — the driver-side fast path would close this small graph
-    # without ever materializing a round (its equivalence is pinned in
-    # test_canonicalize.test_cc_local_fast_path_equals_distributed)
-    e = _edges(spark)
-    a = sorted(map(tuple, cz.connected_components_star(
-        e, local_threshold=0).collect()))
-    b = sorted(map(tuple, cz.connected_components_star(
-        e, materializer=scratch, local_threshold=0).collect()))
-    assert a == b
-    # the barrier actually ran through the store (rounds > 0)
-    assert scratch._n > 0
-
-
 def test_label_prop_cc_scratch_equals_local_checkpoint(spark, scratch):
+    # both sides take an explicit barrier: this test pins the DISTRIBUTED
+    # rounds' barrier contract — the driver-side path would close this
+    # small graph without ever materializing a round (its equivalence is
+    # pinned in test_canonicalize.test_cc_local_fast_path_equals_distributed)
     e = _edges(spark)
     a = sorted(map(tuple, cz.connected_components(
-        e, max_iter=40, local_threshold=0).collect()))
+        e, max_iter=40,
+        materializer=local_checkpoint_materializer).collect()))
     b = sorted(map(tuple, cz.connected_components(
-        e, max_iter=40, materializer=scratch,
-        local_threshold=0).collect()))
+        e, max_iter=40, materializer=scratch).collect()))
     assert a == b
     assert scratch._n > 0
 
@@ -84,7 +74,7 @@ def test_pipeline_threads_materializer(spark, scratch, tmp_path):
         for n in ("transcripts", "authority_entities", "authority_ids"):
             store.write(spark.read.parquet(paths[n]), n)
         KGPipeline(spark, store,
-                   PipelineConfig(cc_algorithm="star", min_vote_total=1),
+                   PipelineConfig(min_vote_total=1),
                    materializer=materializer).run(resume=False)
         nodes = sorted(map(tuple, store.read(spark, "nodes")
                            .select("canonical_id", "label").collect()))
@@ -104,8 +94,7 @@ def test_canonical_map_threads_materializer(spark, scratch):
         "norm_surface": ["pandas", "pandas", "numpy", "numpy"],
         "entity_id": ["Q1", None, None, None],
     }))
-    a = sorted(map(tuple, cz.canonical_map(lm, algorithm="star").collect()))
-    b = sorted(map(tuple, cz.canonical_map(
-        lm, algorithm="star", materializer=scratch).collect()))
+    a = sorted(map(tuple, cz.canonical_map(lm).collect()))
+    b = sorted(map(tuple, cz.canonical_map(lm, materializer=scratch).collect()))
     assert a == b
     assert scratch._n > 0

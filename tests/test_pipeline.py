@@ -145,23 +145,6 @@ def test_config_change_invalidates(spark, store):
     assert all(v == "ran" for v in r.values())
 
 
-def test_pipeline_star_cc_equivalent(spark, corpus, tmp_path):
-    """End-to-end: the star-CC update rule plugged in via
-    PipelineConfig(cc_algorithm='star') produces the identical KB (nodes,
-    edges, statements) as label propagation."""
-    hashes = {}
-    for algo in ("label-propagation", "star"):
-        st = TableStore(str(tmp_path / algo))
-        for name in ("transcripts", "authority_entities", "authority_ids"):
-            st.write(corpus[name], name)
-        cfg = PipelineConfig(blacklist=tuple(datagen.BLACKLIST),
-                             min_vote_total=1, cc_algorithm=algo)
-        KGPipeline(spark, st, cfg).run()
-        hashes[algo] = {t: _table_hash(spark, st, t)
-                        for t in ("nodes", "edges", "statements")}
-    assert hashes["label-propagation"] == hashes["star"]
-
-
 def test_compact_table_preserves_resume(spark, store):
     """Maintenance compaction through the pipeline must not invalidate
     the resume manifest: after compact_table, every stage still skips."""

@@ -1,13 +1,9 @@
 """Salted-join / hot-key-split-join correctness (result equivalence with a
-plain join) and property-based checks for name functions and CC."""
+plain join)."""
 
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from softcite_kb_spark.functions import skew
-from softcite_kb_spark.operators import canonicalize as cz
 
 
 def _skewed_frames(spark):
@@ -50,50 +46,6 @@ def test_hot_keys_detection(spark):
     fact, _ = _skewed_frames(spark)
     hk = [r.k for r in skew.hot_keys(fact, "k", 100).collect()]
     assert hk == ["hot"]
-
-
-# ---- property-based (hypothesis drives pure-Python mirrors; one Spark
-# confirmation per example set would be too slow, so properties run on
-# the column-expression semantics via small literal frames) -------------
-
-@st.composite
-def edge_lists(draw):
-    n = draw(st.integers(2, 12))
-    m = draw(st.integers(1, 20))
-    return [
-        (f"v{draw(st.integers(0, n - 1))}", f"v{draw(st.integers(0, n - 1))}")
-        for _ in range(m)
-    ]
-
-
-def _union_find(pairs):
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {x: find(x) for x in parent}
-
-
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=list(HealthCheck))
-@given(edge_lists())
-def test_cc_random_graphs_match_union_find(spark, pairs):
-    pairs = [p for p in pairs if p[0] != p[1]]
-    if not pairs:
-        return
-    df = spark.createDataFrame(pd.DataFrame(pairs, columns=["src", "dst"]))
-    got = {r.member_id: r.component_id
-           for r in cz.connected_components(df, max_iter=40).collect()}
-    assert got == _union_find(pairs)
 
 
 def test_salted_join_rejects_outer(spark):
