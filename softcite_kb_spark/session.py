@@ -29,6 +29,16 @@ ENGINE_SQL_DEFAULTS: dict[str, str] = {
     # class before it is reused and each build Janino-compiles its plan
     # again; 2000 leaves >5x headroom for AQE plan variants.
     "spark.sql.codegen.cache.maxEntries": "2000",
+    # PySpark's call-site capture for error messages. When on, every
+    # DataFrame and ``functions`` call takes extra JVM round trips (the
+    # active session, a conf read, set and clear of the Python origin)
+    # and walks the Python stack; one pipeline build on the test corpus
+    # made 7.3k round trips with it and 4.7k without. The cost: a
+    # Spark error no longer names the Python file:line of the Column
+    # call that failed. Set it to "true" through ``extra_conf`` or the
+    # CLI ``spark`` section to get that back; PySpark reads it once per
+    # process.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -16,6 +16,19 @@ Reference analog: each softcite_kb stage materializes an ArangoDB database
 ``collection.has(key)`` guards (software_mention_import.py:126). Here a
 stage is one atomic snapshot commit, and resume = "manifest row exists and
 its input snapshot ids still match" (see plans/pipeline.py).
+
+Read cache: ``read`` serves a small committed snapshot from Spark's
+in-memory cache, so repeated reads of a KB table (one per KB request) do
+not re-scan its parquet files. A snapshot is eligible when it is
+unpartitioned and its recorded ``total-files-size`` is at most
+``READ_CACHE_MAX_BYTES``; an unrecorded size (-1) is not. One cached frame
+per snapshot path lives in a process-wide registry whose recorded bytes
+stay within ``READ_CACHE_BUDGET_BYTES`` (least recently read evicted
+first). Spark matches cached plans by path, so every commit unpersists
+the snapshot it supersedes and any frame cached at the path it writes
+(a store removed and rebuilt reuses ``snap-00001``), and ``drop``
+unpersists the table's frames. ``read_at`` and ``changelog`` stay plain
+scans.
 """
 
 from __future__ import annotations
@@ -23,12 +36,61 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+#: Largest recorded snapshot size (parquet bytes) that ``read`` caches.
+READ_CACHE_MAX_BYTES = 16 * 2**20
+#: Recorded bytes of all cached snapshots together.
+READ_CACHE_BUDGET_BYTES = 64 * 2**20
+
+# snapshot path -> (committed_at, recorded bytes, cached frame), least
+# recently read first
+_read_cache: OrderedDict[str, tuple[float, int, DataFrame]] = OrderedDict()
+_read_cache_lock = threading.Lock()
+
+
+def _unpersist(df: DataFrame) -> None:
+    # a stopped SparkContext took its cached blocks with it
+    if df.sparkSession.sparkContext._jsc is not None:
+        df.unpersist()
+
+
+def _cached_read(spark: SparkSession, path: str, committed_at: float,
+                 nbytes: int, load) -> DataFrame:
+    """The registered cached frame of the snapshot at ``path``, made from
+    ``load()`` on first read. An entry of another commit at the same path
+    or of another session is replaced."""
+    with _read_cache_lock:
+        hit = _read_cache.pop(path, None)
+        if hit is not None:
+            if hit[0] == committed_at and hit[2].sparkSession is spark:
+                _read_cache[path] = hit
+                return hit[2]
+            _unpersist(hit[2])
+        df = load().cache()
+        _read_cache[path] = (committed_at, nbytes, df)
+        total = sum(e[1] for e in _read_cache.values())
+        while total > READ_CACHE_BUDGET_BYTES:
+            _, (_, b, old) = _read_cache.popitem(last=False)
+            _unpersist(old)
+            total -= b
+        return df
+
+
+def _uncache(path: str) -> None:
+    """Unpersist every registered frame at or under ``path``."""
+    with _read_cache_lock:
+        for p in [p for p in _read_cache
+                  if p == path or p.startswith(path + os.sep)]:
+            _unpersist(_read_cache.pop(p)[2])
 
 
 @dataclass
@@ -84,6 +146,24 @@ class TableStore:
                 continue
             if os.path.isdir(s["path"]):
                 shutil.rmtree(s["path"], ignore_errors=True)
+
+    def _commit(self, spark: SparkSession, table: str,
+                meta: dict[str, Any], snap: Snapshot) -> None:
+        """Make ``snap`` (its files in place) the current snapshot of
+        ``table``, then retire what it supersedes: the cached frame of
+        the previous snapshot and, when ``snap.path`` is reused (a
+        removed store rebuilt at the same root), any frame Spark still
+        caches for that path."""
+        _uncache(snap.path)
+        spark.catalog.refreshByPath(snap.path)
+        prev = next((s["path"] for s in meta["snapshots"]
+                     if s["snapshot_id"] == meta["current"]), None)
+        meta["snapshots"].append(snap.__dict__)
+        meta["current"] = snap.snapshot_id
+        self._save_meta(table, meta)
+        if prev is not None:
+            _uncache(prev)
+        self._expire(table, meta)
 
     # -- public API -------------------------------------------------------
     def exists(self, table: str) -> bool:
@@ -289,10 +369,7 @@ class TableStore:
             committed_at=time.time(),
             properties=properties or {},
         )
-        meta["snapshots"].append(snap.__dict__)
-        meta["current"] = sid
-        self._save_meta(table, meta)
-        self._expire(table, meta)
+        self._commit(df.sparkSession, table, meta, snap)
         return snap
 
     def merge(
@@ -458,10 +535,7 @@ class TableStore:
             committed_at=time.time(),
             properties=props,
         )
-        meta["snapshots"].append(new_snap.__dict__)
-        meta["current"] = sid
-        self._save_meta(table, meta)
-        self._expire(table, meta)
+        self._commit(df.sparkSession, table, meta, new_snap)
         return new_snap
 
     def append(self, df: DataFrame, table: str,
@@ -533,10 +607,7 @@ class TableStore:
             committed_at=time.time(),
             properties=props,
         )
-        meta["snapshots"].append(new_snap.__dict__)
-        meta["current"] = sid
-        self._save_meta(table, meta)
-        self._expire(table, meta)
+        self._commit(df.sparkSession, table, meta, new_snap)
         return new_snap
 
     @staticmethod
@@ -694,18 +765,29 @@ class TableStore:
         return self.write(df, table, props, partition_by=part_by or None)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
+        """The current snapshot; a small unpartitioned one comes from
+        Spark's in-memory cache (see the module docstring)."""
         snap = self.current_snapshot(table)
         if snap is None:
             raise FileNotFoundError(f"table {table!r} has no snapshot in {self.root}")
-        schema_json = (snap.properties or {}).get("schema_json")
-        if schema_json:
-            from pyspark.sql.types import StructType
+        props = snap.properties or {}
 
-            schema = StructType.fromJson(json.loads(schema_json))
-            return spark.read.schema(schema).parquet(snap.path)
-        return spark.read.parquet(snap.path)
+        def load() -> DataFrame:
+            schema_json = props.get("schema_json")
+            if schema_json:
+                from pyspark.sql.types import StructType
+
+                schema = StructType.fromJson(json.loads(schema_json))
+                return spark.read.schema(schema).parquet(snap.path)
+            return spark.read.parquet(snap.path)
+
+        size = props.get("total-files-size", -1)
+        if props.get("partition_by") or not 0 <= size <= READ_CACHE_MAX_BYTES:
+            return load()
+        return _cached_read(spark, snap.path, snap.committed_at, size, load)
 
     def drop(self, table: str) -> None:
         d = os.path.join(self.root, table)
+        _uncache(d)
         if os.path.isdir(d):
             shutil.rmtree(d)

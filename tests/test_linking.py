@@ -227,6 +227,48 @@ def test_voting_min_total(spark):
     assert _vote_links(df, min_total=1).count() == 1
 
 
+def _surface_candidates(spark, rows):
+    """Candidate rows as ``generate_surface_candidates`` emits them:
+    (norm_surface, entity_id, method, score, surface_mentions)."""
+    return spark.createDataFrame(pd.DataFrame(rows, columns=[
+        "norm_surface", "entity_id", "method", "score", "surface_mentions"]))
+
+
+def test_surface_voting_rejects_two_best_candidates(spark):
+    # "tool": two best-score candidates, |B(s)| = 2, so each holds half
+    # the votes and fails the strict majority; "kit": the lower-scored
+    # alias candidate leaves one best candidate, which wins
+    cands = _surface_candidates(spark, [
+        ("tool", "QA", "label", 1.0, 10),
+        ("tool", "QB", "label", 1.0, 10),
+        ("kit", "QC", "label", 1.0, 10),
+        ("kit", "QD", "alias", 0.9, 10),
+    ])
+    got = {r.norm_surface: (r.entity_id, r.votes, r.total_votes)
+           for r in lk.vote_links_surface(cands, min_total=2,
+                                          majority=0.5).collect()}
+    assert got == {"kit": ("QC", 10, 10)}
+
+
+def test_surface_voting_min_total(spark):
+    cands = _surface_candidates(spark, [("rare", "QA", "label", 1.0, 1)])
+    assert lk.vote_links_surface(cands, min_total=2).count() == 0
+    assert lk.vote_links_surface(cands, min_total=1).count() == 1
+
+
+def test_surface_voting_tie_breaks_on_min_entity_id(spark):
+    # |B(s)| = 2 passes a 0.3 majority (10 > 20 * 0.3); the smaller
+    # entity id wins whatever the row order
+    cands = _surface_candidates(spark, [
+        ("tool", "QB", "label", 1.0, 10),
+        ("tool", "QA", "label", 1.0, 10),
+    ])
+    got = [(r.norm_surface, r.entity_id, r.votes, r.total_votes)
+           for r in lk.vote_links_surface(cands, min_total=2,
+                                          majority=0.3).collect()]
+    assert got == [("tool", "QA", 10, 20)]
+
+
 def test_language_post_validation(spark):
     # candidate whose authority language claims conflict with observed
     # written_in evidence is dropped (merge.py:268-297 semantics)
